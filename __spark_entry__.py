@@ -1591,8 +1591,7 @@ def _q_pansharpen(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from i_landsat8_swlst_spark import multiband, pipeline
     from i_landsat8_swlst_spark.algebra import resample_plane
-    from i_landsat8_swlst_spark.pipeline import (_batch_from_cols,
-                                                 _batch_rows)
+    from i_landsat8_swlst_spark.tileops import batch_from_cols, batch_rows
 
     scenes, meta, emis = _tiny_fixture(spark)
     tiles = pipeline.lst_tiles(pipeline.build_enriched(scenes, meta, emis),
@@ -1607,7 +1606,7 @@ def _q_pansharpen(spark: SparkSession, sf_dir: str) -> DataFrame:
         for batch in batches:
             cols = {f.name: [] for f in out_schema}
             ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
+            for row in batch_rows(batch):
                 w, h = int(row.w), int(row.h)
                 lst = codecs.decode_f32bt(row.lst_bytes, w, h)
                 pan = resample_plane(lst.astype("float64"), h * 2, w * 2,
@@ -1619,7 +1618,7 @@ def _q_pansharpen(spark: SparkSession, sf_dir: str) -> DataFrame:
                     ap[name](getattr(row, name))
                 ap["pan_bytes"](pan.astype("<f4").tobytes())
             if cols["scene_id"]:
-                yield _batch_from_cols(cols, out_schema)
+                yield batch_from_cols(cols, out_schema)
 
     with_pan = src.mapInArrow(synth_pan, out_schema)
     ps = multiband.pansharpen_tiles(with_pan, "pan_bytes",

@@ -36,7 +36,7 @@ from pyspark.sql.types import (
 )
 
 from . import codecs
-from .pipeline import _batch_from_cols, _batch_rows, _finite_stats
+from .tileops import batch_from_cols, batch_rows, finite_stats
 
 def _if_(c, a, b):
     # GRASS r.mapcalc parity: if(NULL, a, b) is NULL, not the else arm —
@@ -176,7 +176,7 @@ def map_algebra(tiles: DataFrame, expr: str,
         for batch in batches:
             cols: dict[str, list] = {f.name: [] for f in ALGEBRA_SCHEMA}
             ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
+            for row in batch_rows(batch):
                 w, h = int(row.w), int(row.h)
                 env = {
                     n: codecs.decode_f32bt(getattr(row, c), w, h).astype(np.float64)
@@ -184,7 +184,7 @@ def map_algebra(tiles: DataFrame, expr: str,
                 }
                 out = np.broadcast_to(
                     np.asarray(fn_expr(env), dtype=np.float64), (h, w))
-                n_valid, vmin, vmax, vmean = _finite_stats(out)
+                n_valid, vmin, vmax, vmean = finite_stats(out)
                 ap["image_id"](getattr(row, "image_id", None))
                 ap["scene_id"](row.scene_id)
                 ap["tile_x"](row.tile_x); ap["tile_y"](row.tile_y)
@@ -193,7 +193,7 @@ def map_algebra(tiles: DataFrame, expr: str,
                 ap["n_valid"](n_valid)
                 ap["out_min"](vmin); ap["out_max"](vmax); ap["out_mean"](vmean)
             if cols["scene_id"]:
-                yield _batch_from_cols(cols, ALGEBRA_SCHEMA)
+                yield batch_from_cols(cols, ALGEBRA_SCHEMA)
 
     return tiles.mapInArrow(fn, ALGEBRA_SCHEMA)
 
@@ -265,7 +265,7 @@ def resample_tiles(tiles: DataFrame, scale: float,
         for batch in batches:
             cols: dict[str, list] = {f.name: [] for f in RESAMPLE_SCHEMA}
             ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
+            for row in batch_rows(batch):
                 w, h = int(row.w), int(row.h)
                 ow, oh = max(1, round(w * scale)), max(1, round(h * scale))
                 plane = codecs.decode_f32bt(getattr(row, src_col), w, h).astype(np.float64)
@@ -277,7 +277,7 @@ def resample_tiles(tiles: DataFrame, scale: float,
                 ap["out_bytes"](np.ascontiguousarray(out).astype("<f4").tobytes())
                 ap["n_valid"](int(np.isfinite(out).sum()))
             if cols["scene_id"]:
-                yield _batch_from_cols(cols, RESAMPLE_SCHEMA)
+                yield batch_from_cols(cols, RESAMPLE_SCHEMA)
 
     return tiles.mapInArrow(fn, RESAMPLE_SCHEMA)
 
@@ -402,12 +402,12 @@ def reclass_tiles(tiles: DataFrame, rules_text: str,
         for batch in batches:
             cols: dict[str, list] = {f.name: [] for f in ALGEBRA_SCHEMA}
             ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
+            for row in batch_rows(batch):
                 w, h = int(row.w), int(row.h)
                 x = codecs.decode_f32bt(getattr(row, src_col), w, h) \
                     .astype(np.float64)
                 out = reclass_plane(x, rules)
-                n_valid, vmin, vmax, vmean = _finite_stats(out)
+                n_valid, vmin, vmax, vmean = finite_stats(out)
                 ap["image_id"](getattr(row, "image_id", None))
                 ap["scene_id"](row.scene_id)
                 ap["tile_x"](row.tile_x); ap["tile_y"](row.tile_y)
@@ -417,6 +417,6 @@ def reclass_tiles(tiles: DataFrame, rules_text: str,
                 ap["n_valid"](n_valid)
                 ap["out_min"](vmin); ap["out_max"](vmax); ap["out_mean"](vmean)
             if cols["scene_id"]:
-                yield _batch_from_cols(cols, ALGEBRA_SCHEMA)
+                yield batch_from_cols(cols, ALGEBRA_SCHEMA)
 
     return tiles.mapInArrow(fn, ALGEBRA_SCHEMA)

@@ -64,8 +64,8 @@ from pyspark.sql.types import (
     StructField, StructType,
 )
 
-from .multiband import _decode_stack, band_moments
-from .pipeline import _batch_rows
+from .multiband import _MOMENT_SCHEMA, _decode_stack, band_moments
+from .tileops import arrow_schema, batch_from_cols, batch_rows, spread_tiles
 
 _KM_MODEL_SCHEMA = StructType([
     StructField("scene_id", StringType()),
@@ -123,10 +123,7 @@ def class_features(tiles: DataFrame, band_cols: list[str]) -> DataFrame:
     so callers persist MEMORY_AND_DISK and it spills rather than OOMs —
     at 100 TB that is iters x (scan+decode) traded for 1 x decode + spill
     reads of a columnar-compact array column."""
-
-    arrow = pa.schema([pa.field("scene_id", pa.string()),
-                       pa.field("n", pa.int64()),
-                       pa.field("xflat", pa.list_(pa.float64()))])
+    arrow = arrow_schema(_FEAT_SCHEMA)
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
@@ -134,7 +131,7 @@ def class_features(tiles: DataFrame, band_cols: list[str]) -> DataFrame:
             ns: list[int] = []
             chunks: list[np.ndarray] = []
             offs = [0]
-            for row in _batch_rows(batch):
+            for row in batch_rows(batch):
                 x = _decode_stack(row, band_cols)
                 x = x[np.isfinite(x).all(axis=1)]
                 if x.shape[0] == 0:
@@ -170,9 +167,6 @@ def _moments_from_features(feats: DataFrame, b: int) -> DataFrame:
     """band_moments' (scene_id, n, sums) tiny frame, sourced from a
     class_features frame instead of raw tile bytes — same positional
     map-side-combining reduction, zero additional decodes."""
-    arrow = pa.schema([pa.field("scene_id", pa.string()),
-                       pa.field("n", pa.int64()),
-                       pa.field("sums", pa.list_(pa.float64()))])
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         iu = np.triu_indices(b)
@@ -189,14 +183,9 @@ def _moments_from_features(feats: DataFrame, b: int) -> DataFrame:
                 ap["n"](int(x.shape[0]))
                 ap["sums"](list(x.sum(axis=0)) + list(cross[iu]))
             if cols["scene_id"]:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(cols[f.name], type=f.type) for f in arrow],
-                    schema=arrow)
+                yield batch_from_cols(cols, _MOMENT_SCHEMA)
 
-    parts = feats.mapInArrow(fn, StructType([
-        StructField("scene_id", StringType()),
-        StructField("n", LongType()),
-        StructField("sums", ArrayType(DoubleType()))]))
+    parts = feats.mapInArrow(fn, _MOMENT_SCHEMA)
     return (
         parts.select("scene_id", "n", F.posexplode("sums").alias("pos", "v"))
         .groupBy("scene_id", "pos")
@@ -228,10 +217,6 @@ def _class_partials(tiles: DataFrame, band_cols: list[str],
     ``decoded`` the source is a class_features frame (xflat arrays, no
     decode) instead of raw tile bytes."""
     b = len(band_cols)
-    arrow = pa.schema([pa.field("scene_id", pa.string()),
-                       pa.field("cls", pa.int32()),
-                       pa.field("n", pa.int64()),
-                       pa.field("sums", pa.list_(pa.float64()))])
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         iu = np.triu_indices(b)
@@ -269,7 +254,7 @@ def _class_partials(tiles: DataFrame, band_cols: list[str],
                     if x.shape[0]:
                         emit(sid[i], x, int(kk[i]), cen[i])
             else:
-                for row in _batch_rows(batch):
+                for row in batch_rows(batch):
                     if row.centers is None:  # scene with no model row
                         continue
                     x = _decode_stack(row, band_cols)
@@ -277,9 +262,7 @@ def _class_partials(tiles: DataFrame, band_cols: list[str],
                     if x.shape[0]:
                         emit(row.scene_id, x, int(row.k), row.centers)
             if cols["scene_id"]:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(cols[f.name], type=f.type) for f in arrow],
-                    schema=arrow)
+                yield batch_from_cols(cols, _PART_SCHEMA)
 
     proj = (tiles.select("scene_id", "xflat") if decoded
             else tiles.select("scene_id", "w", "h", *band_cols))
@@ -458,21 +441,11 @@ def classify_tiles(tiles: DataFrame, band_cols: list[str],
     else:
         model = model_df.select("scene_id", "k", "means", "invcov", "logdet")
 
-    # _batch_from_cols only maps scalar field types; counts needs an
-    # explicit Arrow schema (the band_moments pattern)
-    arrow = pa.schema([
-        pa.field("image_id", pa.string()), pa.field("scene_id", pa.string()),
-        pa.field("tile_x", pa.int32()), pa.field("tile_y", pa.int32()),
-        pa.field("w", pa.int32()), pa.field("h", pa.int32()),
-        pa.field("class_bytes", pa.binary()), pa.field("score_bytes", pa.binary()),
-        pa.field("n_valid", pa.int64()), pa.field("counts", pa.list_(pa.int64())),
-    ])
-
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             cols: dict[str, list] = {f.name: [] for f in CLASSIFY_SCHEMA}
             ap = {k_: v.append for k_, v in cols.items()}
-            for row in _batch_rows(batch):
+            for row in batch_rows(batch):
                 w, h = int(row.w), int(row.h)
                 x = _decode_stack(row, band_cols)
                 ok = np.isfinite(x).all(axis=1)
@@ -515,11 +488,7 @@ def classify_tiles(tiles: DataFrame, band_cols: list[str],
                 ap["n_valid"](int(ok.sum()))
                 ap["counts"]([int(c) for c in counts])
             if cols["scene_id"]:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(cols[f.name], type=f.type) for f in arrow],
-                    schema=arrow)
-
-    from .pipeline import spread_tiles
+                yield batch_from_cols(cols, CLASSIFY_SCHEMA)
 
     keep = ["image_id", "scene_id", "tile_x", "tile_y", "w", "h", *band_cols]
     keep = [c for c in keep if c in tiles.columns]

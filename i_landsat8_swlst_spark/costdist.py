@@ -16,7 +16,7 @@ decomposition (monotone Bellman-Ford on the 8-connected grid graph):
    chamfer sweeps (Borgefors).
 2. **Halo exchange + re-sweep, iterated to the global fixpoint**: each
    round exchanges a 1-pixel halo of the current distance planes
-   (pipeline.halo_plane_tiles) and re-relaxes every tile with the
+   (tileops.halo_plane_tiles) and re-relaxes every tile with the
    neighbor ring as additional fixed sources. Distances only decrease
    and are bounded below, so the iteration terminates; a per-tile
    ``changed`` flag drives the driver-side convergence test. Rounds ~
@@ -53,7 +53,7 @@ from pyspark.sql.types import (
 )
 
 from . import codecs
-from .pipeline import _batch_from_cols, _batch_rows, halo_plane_tiles
+from .tileops import batch_from_cols, batch_rows, halo_plane_tiles
 
 W_ORTH = 3.0   # chamfer 3-4 metric: exact ints for uniform cost
 W_DIAG = 4.0
@@ -210,7 +210,7 @@ def cost_distance_tiles(tiles: DataFrame, threshold: float,
         for batch in batches:
             cols = _state_cols()
             ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
+            for row in batch_rows(batch):
                 w, h = int(row.w), int(row.h)
                 plane = codecs.decode_f32bt(getattr(row, src_col), w, h)
                 cost = (codecs.decode_f32bt(getattr(row, cost_col), w, h)
@@ -226,7 +226,7 @@ def cost_distance_tiles(tiles: DataFrame, threshold: float,
                 ap["dist_bytes"](dist.astype("<f4").tobytes())
                 ap["changed"](True)
             if cols["scene_id"]:
-                yield _batch_from_cols(cols, _STATE_SCHEMA)
+                yield batch_from_cols(cols, _STATE_SCHEMA)
 
     state = tiles.mapInArrow(init_fn, _STATE_SCHEMA).localCheckpoint()
 
@@ -243,7 +243,7 @@ def cost_distance_tiles(tiles: DataFrame, threshold: float,
         for batch in batches:
             cols = _state_cols()
             ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
+            for row in batch_rows(batch):
                 w, h = int(row.w), int(row.h)
                 pad = codecs.decode_f32bt(row.pad_bytes, w + 2, h + 2)
                 old = pad[1:-1, 1:-1].copy()
@@ -268,7 +268,7 @@ def cost_distance_tiles(tiles: DataFrame, threshold: float,
                 ap["dist_bytes"](interior.astype("<f4").tobytes())
                 ap["changed"](changed)
             if cols["scene_id"]:
-                yield _batch_from_cols(cols, _STATE_SCHEMA)
+                yield batch_from_cols(cols, _STATE_SCHEMA)
 
     for _ in range(max_rounds):
         haloed = halo_plane_tiles(state, r=1, src_col="dist_bytes")
@@ -288,7 +288,7 @@ def cost_distance_tiles(tiles: DataFrame, threshold: float,
         for batch in batches:
             cols = {f.name: [] for f in COST_DISTANCE_SCHEMA}
             ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
+            for row in batch_rows(batch):
                 w, h = int(row.w), int(row.h)
                 d = codecs.decode_f32bt(row.dist_bytes, w, h)
                 d[~np.isfinite(d)] = np.nan
@@ -301,7 +301,7 @@ def cost_distance_tiles(tiles: DataFrame, threshold: float,
                 ap["n_reached"](int(finite.sum()))
                 ap["dist_max"](float(d[finite].max()) if finite.any() else None)
             if cols["scene_id"]:
-                yield _batch_from_cols(cols, COST_DISTANCE_SCHEMA)
+                yield batch_from_cols(cols, COST_DISTANCE_SCHEMA)
 
     return state.drop("changed").mapInArrow(final_fn, COST_DISTANCE_SCHEMA)
 
@@ -339,7 +339,7 @@ def buffer_tiles(tiles: DataFrame, threshold: float, distances: list[float],
         for batch in batches:
             cols = {f.name: [] for f in BUFFER_SCHEMA}
             ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
+            for row in batch_rows(batch):
                 w, h = int(row.w), int(row.h)
                 dist = codecs.decode_f32bt(row.dist_bytes, w, h)
                 zone = np.zeros((h, w), dtype=np.float64)
@@ -357,7 +357,7 @@ def buffer_tiles(tiles: DataFrame, threshold: float, distances: list[float],
                 ap["zone_bytes"](zone.astype("<f4").tobytes())
                 ap["zone_counts"](",".join(f"{int(z)}:{c}" for z, c in zip(uniq, cnt)))
             if cols["scene_id"]:
-                yield _batch_from_cols(cols, BUFFER_SCHEMA)
+                yield batch_from_cols(cols, BUFFER_SCHEMA)
 
     return d.mapInArrow(fn, BUFFER_SCHEMA)
 
@@ -555,7 +555,7 @@ def cost_allocation_tiles(tiles: DataFrame, threshold: float,
         for batch in batches:
             cols = {f.name: [] for f in _ALLOC_STATE_SCHEMA}
             ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
+            for row in batch_rows(batch):
                 w, h = int(row.w), int(row.h)
                 plane = codecs.decode_f32bt(getattr(row, src_col), w, h)
                 cost = (codecs.decode_f32bt(getattr(row, cost_col), w, h)
@@ -579,7 +579,7 @@ def cost_allocation_tiles(tiles: DataFrame, threshold: float,
                                   .astype("<f8").tobytes())
                 ap["changed"](True)
             if cols["scene_id"]:
-                yield _batch_from_cols(cols, _ALLOC_STATE_SCHEMA)
+                yield batch_from_cols(cols, _ALLOC_STATE_SCHEMA)
 
     state = tiles.mapInArrow(init_fn, _ALLOC_STATE_SCHEMA).localCheckpoint()
 
@@ -598,7 +598,7 @@ def cost_allocation_tiles(tiles: DataFrame, threshold: float,
         for batch in batches:
             cols = {f.name: [] for f in _ALLOC_STATE_SCHEMA}
             ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
+            for row in batch_rows(batch):
                 w, h = int(row.w), int(row.h)
                 dist = codecs.decode_f32bt(row.pad_bytes, w + 2, h + 2) \
                     .astype(np.float64)
@@ -624,7 +624,7 @@ def cost_allocation_tiles(tiles: DataFrame, threshold: float,
                                   .astype("<f8").tobytes())
                 ap["changed"](changed)
             if cols["scene_id"]:
-                yield _batch_from_cols(cols, _ALLOC_STATE_SCHEMA)
+                yield batch_from_cols(cols, _ALLOC_STATE_SCHEMA)
 
     for _ in range(max_rounds):
         d_halo = halo_plane_tiles(state, r=1, src_col="dist_bytes")
@@ -650,7 +650,7 @@ def cost_allocation_tiles(tiles: DataFrame, threshold: float,
         for batch in batches:
             cols = {f.name: [] for f in COST_ALLOCATION_SCHEMA}
             ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
+            for row in batch_rows(batch):
                 w, h = int(row.w), int(row.h)
                 d = codecs.decode_f32bt(row.dist_bytes, w, h)
                 lab = np.frombuffer(row.alloc_bytes, dtype="<f8") \
@@ -669,6 +669,6 @@ def cost_allocation_tiles(tiles: DataFrame, threshold: float,
                                if finite.any() else 0)
                 ap["dist_max"](float(d[finite].max()) if finite.any() else None)
             if cols["scene_id"]:
-                yield _batch_from_cols(cols, COST_ALLOCATION_SCHEMA)
+                yield batch_from_cols(cols, COST_ALLOCATION_SCHEMA)
 
     return state.drop("changed").mapInArrow(final_fn, COST_ALLOCATION_SCHEMA)

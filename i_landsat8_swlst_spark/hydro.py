@@ -9,7 +9,7 @@ fixed-order tie break — so flats and local minima become *pits* and the
 graph is a forest, acyclic by construction). All cross-tile coordination
 happens through two scale-safe primitives:
 
-1. **1-px halo exchange** (pipeline.halo_plane_tiles) — flow direction
+1. **1-px halo exchange** (tileops.halo_plane_tiles) — flow direction
    needs the 8-neighborhood, so one static elevation halo makes the
    per-tile kernel EXACTLY equal to the whole-scene kernel.
 2. **Iterated halo fixpoint** for accumulation (the costdist pattern):
@@ -53,7 +53,7 @@ from pyspark.sql.types import (
     StructField, StructType,
 )
 
-from .pipeline import _batch_from_cols, _batch_rows, halo_plane_tiles
+from .tileops import batch_from_cols, batch_rows, halo_plane_tiles
 
 # D8 neighbor order (dy, dx) — fixed, ties broken by FIRST index with the
 # max drop, so direction assignment is deterministic everywhere.
@@ -190,7 +190,7 @@ def flow_dir_tiles(tiles: DataFrame, src_col: str = "lst_bytes") -> DataFrame:
         for batch in batches:
             cols = {f.name: [] for f in FLOW_DIR_SCHEMA}
             ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
+            for row in batch_rows(batch):
                 w, h = int(row.w), int(row.h)
                 pad = np.frombuffer(row.pad_bytes, dtype="<f4") \
                         .reshape(h + 2, w + 2).astype(np.float64)
@@ -200,7 +200,7 @@ def flow_dir_tiles(tiles: DataFrame, src_col: str = "lst_bytes") -> DataFrame:
                 ap["w"](w); ap["h"](h)
                 ap["dir_bytes"](dirs.astype("<f4").tobytes())
             if cols["scene_id"]:
-                yield _batch_from_cols(cols, FLOW_DIR_SCHEMA)
+                yield batch_from_cols(cols, FLOW_DIR_SCHEMA)
 
     return halo_plane_tiles(tiles, r=1, src_col=src_col).mapInArrow(
         fn, FLOW_DIR_SCHEMA)
@@ -276,7 +276,7 @@ def flow_accum_tiles(tiles: DataFrame, src_col: str = "lst_bytes",
         for batch in batches:
             cols = {f.name: [] for f in _ACC_STATE_SCHEMA}
             ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
+            for row in batch_rows(batch):
                 w, h = int(row.w), int(row.h)
                 d = np.frombuffer(row.dir_bytes, dtype="<f4") \
                       .reshape(h, w).astype(np.float64)
@@ -287,7 +287,7 @@ def flow_accum_tiles(tiles: DataFrame, src_col: str = "lst_bytes",
                 ap["acc_bytes"](acc.astype("<f8").tobytes())
                 ap["changed"](True)
             if cols["scene_id"]:
-                yield _batch_from_cols(cols, _ACC_STATE_SCHEMA)
+                yield batch_from_cols(cols, _ACC_STATE_SCHEMA)
 
     state = dirs.mapInArrow(init_fn, _ACC_STATE_SCHEMA).localCheckpoint()
 
@@ -295,7 +295,7 @@ def flow_accum_tiles(tiles: DataFrame, src_col: str = "lst_bytes",
         for batch in batches:
             cols = {f.name: [] for f in _ACC_STATE_SCHEMA}
             ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
+            for row in batch_rows(batch):
                 w, h = int(row.w), int(row.h)
                 acc_pad = np.frombuffer(row.pad_bytes, dtype="<f8") \
                             .reshape(h + 2, w + 2)
@@ -311,7 +311,7 @@ def flow_accum_tiles(tiles: DataFrame, src_col: str = "lst_bytes",
                 ap["acc_bytes"](acc.astype("<f8").tobytes())
                 ap["changed"](changed)
             if cols["scene_id"]:
-                yield _batch_from_cols(cols, _ACC_STATE_SCHEMA)
+                yield batch_from_cols(cols, _ACC_STATE_SCHEMA)
 
     for _ in range(max_rounds):
         haloed = halo_plane_tiles(state, r=1, src_col="acc_bytes",
@@ -334,7 +334,7 @@ def flow_accum_tiles(tiles: DataFrame, src_col: str = "lst_bytes",
         for batch in batches:
             cols = {f.name: [] for f in FLOW_ACCUM_SCHEMA}
             ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
+            for row in batch_rows(batch):
                 w, h = int(row.w), int(row.h)
                 acc = np.frombuffer(row.acc_bytes, dtype="<f8").reshape(h, w)
                 d = np.frombuffer(row.dir_bytes, dtype="<f4").reshape(h, w)
@@ -348,7 +348,7 @@ def flow_accum_tiles(tiles: DataFrame, src_col: str = "lst_bytes",
                 ap["accum_max"](float(acc[finite].max()) if finite.any() else None)
                 ap["n_pits"](int((d == np.float32(_PIT)).sum()))
             if cols["scene_id"]:
-                yield _batch_from_cols(cols, FLOW_ACCUM_SCHEMA)
+                yield batch_from_cols(cols, FLOW_ACCUM_SCHEMA)
 
     return final.mapInArrow(final_fn, FLOW_ACCUM_SCHEMA)
 
@@ -482,7 +482,7 @@ def basin_tiles(tiles: DataFrame, src_col: str = "lst_bytes",
         for batch in batches:
             tcols = {f.name: [] for f in _TILE_STATE_SCHEMA}
             tap = {k: v.append for k, v in tcols.items()}
-            for row in _batch_rows(batch):
+            for row in batch_rows(batch):
                 w, h = int(row.w), int(row.h)
                 dir_pad = np.frombuffer(row.pad_bytes, dtype="<f4") \
                             .reshape(h + 2, w + 2).astype(np.float64)
@@ -493,13 +493,13 @@ def basin_tiles(tiles: DataFrame, src_col: str = "lst_bytes",
                 tap["w"](w); tap["h"](h)
                 tap["label_bytes"](label.astype("<i8").tobytes())
             if tcols["scene_id"]:
-                yield _batch_from_cols(tcols, _TILE_STATE_SCHEMA)
+                yield batch_from_cols(tcols, _TILE_STATE_SCHEMA)
 
     def links_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             lcols = {f.name: [] for f in _LINK_SCHEMA}
             lap = {k: v.append for k, v in lcols.items()}
-            for row in _batch_rows(batch):
+            for row in batch_rows(batch):
                 w, h = int(row.w), int(row.h)
                 dir_pad = np.frombuffer(row.pad_bytes, dtype="<f4") \
                             .reshape(h + 2, w + 2).astype(np.float64)
@@ -509,7 +509,7 @@ def basin_tiles(tiles: DataFrame, src_col: str = "lst_bytes",
                     lap["scene_id"](row.scene_id)
                     lap["gid"](g); lap["nxt"](nx); lap["final"](int(fi))
             if lcols["scene_id"]:
-                yield _batch_from_cols(lcols, _LINK_SCHEMA)
+                yield batch_from_cols(lcols, _LINK_SCHEMA)
 
     pads_ck = dir_pads.localCheckpoint()
     tiles_state = pads_ck.mapInArrow(resolve_fn, _TILE_STATE_SCHEMA) \
@@ -537,7 +537,7 @@ def basin_tiles(tiles: DataFrame, src_col: str = "lst_bytes",
         for batch in batches:
             cols = {f.name: [] for f in schema}
             ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
+            for row in batch_rows(batch):
                 w, h = int(row.w), int(row.h)
                 lab = np.frombuffer(row.label_bytes, dtype="<i8").reshape(h, w)
                 pend = lab[(lab < 0) & (lab != _NODATA_I64)]
@@ -546,7 +546,7 @@ def basin_tiles(tiles: DataFrame, src_col: str = "lst_bytes",
                     ap["tile_x"](row.tile_x); ap["tile_y"](row.tile_y)
                     ap["fgid"](f_)
             if cols["scene_id"]:
-                yield _batch_from_cols(cols, schema)
+                yield batch_from_cols(cols, schema)
 
     foreign = tiles_state.mapInArrow(foreign_fn, StructType([
         StructField("scene_id", StringType()),
@@ -568,7 +568,7 @@ def basin_tiles(tiles: DataFrame, src_col: str = "lst_bytes",
         for batch in batches:
             cols = {f.name: [] for f in BASIN_SCHEMA}
             ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
+            for row in batch_rows(batch):
                 w, h = int(row.w), int(row.h)
                 lab = np.frombuffer(row.label_bytes, dtype="<i8") \
                         .reshape(h, w).copy()
@@ -594,7 +594,7 @@ def basin_tiles(tiles: DataFrame, src_col: str = "lst_bytes",
                 ap["n_basins_local"](int(np.unique(lab[data]).size)
                                      if data.any() else 0)
             if cols["scene_id"]:
-                yield _batch_from_cols(cols, BASIN_SCHEMA)
+                yield batch_from_cols(cols, BASIN_SCHEMA)
 
     return subst_in.mapInArrow(subst_fn, BASIN_SCHEMA)
 

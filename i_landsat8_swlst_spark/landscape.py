@@ -48,7 +48,7 @@ from pyspark.sql.types import (
 
 from . import codecs
 from .multiband import scene_ranges_df
-from .pipeline import _batch_from_cols, _batch_rows
+from .tileops import batch_from_cols, batch_rows
 from .regions import _cc_min_label, _pack_node, label_tile
 from .texture import _quantize
 
@@ -77,7 +77,7 @@ def _extract(tiles: DataFrame, src_col: str, levels: int,
                 ap["area_px"](int(area)); ap["edge_px"](int(edge))
                 ap["gx"](int(gx)); ap["gy"](int(gy))
 
-            for row in _batch_rows(batch):
+            for row in batch_rows(batch):
                 w, h = int(row.w), int(row.h)
                 tx, ty = int(row.tile_x), int(row.tile_y)
                 plane = codecs.decode_f32bt(getattr(row, src_col), w, h)
@@ -148,7 +148,7 @@ def _extract(tiles: DataFrame, src_col: str, levels: int,
                                          sq[sm]):
                         emit(row.scene_id, kind, c, gx=gx, gy=gy)
             if cols["scene_id"]:
-                yield _batch_from_cols(cols, _LS_SCHEMA)
+                yield batch_from_cols(cols, _LS_SCHEMA)
 
     # mapInArrow cannot column-prune: select only what the kernel reads.
     # The per-scene range rides as a tiny broadcast-joined DataFrame (a

@@ -31,7 +31,7 @@ from pyspark.sql.types import (
 )
 
 from . import codecs, synth
-from .pipeline import _to_batch
+from .tileops import to_batch
 
 # --------------------------------------------------------------------------
 # synthetic media fixtures (deterministic: seeded by key, FIXTURES.md rules)
@@ -111,7 +111,7 @@ def media_meta(scenes: DataFrame) -> DataFrame:
                     pass  # catalogued as decoded=0
                 out.append(rec)
             if out:
-                yield _to_batch(pd.DataFrame(out), MEDIA_META_SCHEMA)
+                yield to_batch(pd.DataFrame(out), MEDIA_META_SCHEMA)
 
     return scenes.select("image_id", "bytes", "w", "h", "fmt").mapInArrow(
         fn, MEDIA_META_SCHEMA)
@@ -159,7 +159,7 @@ def tile_overviews(scenes: DataFrame, levels: tuple[int, ...] = (2, 4)) -> DataF
                         "px_mean": round(float(pooled.mean()), 6),
                     })
             if out:
-                yield _to_batch(pd.DataFrame(out), OVERVIEW_SCHEMA)
+                yield to_batch(pd.DataFrame(out), OVERVIEW_SCHEMA)
 
     return scenes.select("image_id", "bytes", "w", "h", "fmt").mapInArrow(
         fn, OVERVIEW_SCHEMA)
@@ -206,7 +206,7 @@ def frame_sample(videos: DataFrame, every: int = 4) -> DataFrame:
                         "px_mean": round(float(frame.mean()), 6),
                     })
             if out:
-                yield _to_batch(pd.DataFrame(out), FRAME_SCHEMA)
+                yield to_batch(pd.DataFrame(out), FRAME_SCHEMA)
 
     return videos.select("video_id", "bytes", "w", "h", "fmt").mapInArrow(
         fn, FRAME_SCHEMA)
@@ -243,7 +243,7 @@ def audio_features(clips: DataFrame) -> DataFrame:
                     "zero_crossings": int(np.count_nonzero(np.diff(np.signbit(sig)))),
                 })
             if out:
-                yield _to_batch(pd.DataFrame(out), AUDIO_SCHEMA)
+                yield to_batch(pd.DataFrame(out), AUDIO_SCHEMA)
 
     return clips.select("clip_id", "bytes", "fmt").mapInArrow(fn, AUDIO_SCHEMA)
 

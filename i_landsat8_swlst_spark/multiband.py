@@ -45,7 +45,7 @@ from pyspark.sql.types import (
 )
 
 from . import codecs
-from .pipeline import _batch_from_cols, _batch_rows
+from .tileops import batch_from_cols, batch_rows, spread_tiles
 
 _MOMENT_SCHEMA = StructType([
     StructField("scene_id", StringType()),
@@ -69,18 +69,13 @@ def band_moments(tiles: DataFrame, band_cols: list[str]) -> DataFrame:
     tile pass emits one (scene, partials) row per tile, and the positional
     sum is a single map-side-combining aggregation."""
     b = len(band_cols)
-    # _batch_from_cols only maps scalar field types; arrays need an
-    # explicit Arrow schema
-    arrow = pa.schema([pa.field("scene_id", pa.string()),
-                       pa.field("n", pa.int64()),
-                       pa.field("sums", pa.list_(pa.float64()))])
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             cols: dict[str, list] = {f.name: [] for f in _MOMENT_SCHEMA}
             ap = {k: v.append for k, v in cols.items()}
             iu = np.triu_indices(b)
-            for row in _batch_rows(batch):
+            for row in batch_rows(batch):
                 x = _decode_stack(row, band_cols)
                 x = x[np.isfinite(x).all(axis=1)]
                 cross = x.T @ x  # exact f64 partials within the tile
@@ -88,9 +83,7 @@ def band_moments(tiles: DataFrame, band_cols: list[str]) -> DataFrame:
                 ap["n"](int(x.shape[0]))
                 ap["sums"](list(x.sum(axis=0)) + list(cross[iu]))
             if cols["scene_id"]:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(cols[f.name], type=f.type) for f in arrow],
-                    schema=arrow)
+                yield batch_from_cols(cols, _MOMENT_SCHEMA)
 
     parts = tiles.mapInArrow(fn, _MOMENT_SCHEMA)
     return (
@@ -232,7 +225,7 @@ def pca_tiles(tiles: DataFrame, band_cols: list[str], k: int | None = None,
         for batch in batches:
             cols: dict[str, list] = {f.name: [] for f in schema}
             ap = {kk: v.append for kk, v in cols.items()}
-            for row in _batch_rows(batch):
+            for row in batch_rows(batch):
                 mean = np.asarray(row.mean)
                 vecs = np.asarray(row.comps).reshape(b, k)
                 w, h = int(row.w), int(row.h)
@@ -251,7 +244,7 @@ def pca_tiles(tiles: DataFrame, band_cols: list[str], k: int | None = None,
                     ap[f"pc{i+1}_mean"](
                         float(np.nanmean(plane)) if ok.any() else None)
             if cols["scene_id"]:
-                yield _batch_from_cols(cols, schema)
+                yield batch_from_cols(cols, schema)
 
     # inner join: a scene without a model row (degenerate) cannot project
     src = tiles.join(F.broadcast(model_df), on="scene_id", how="inner")
@@ -303,16 +296,14 @@ def scene_ranges_df(tiles: DataFrame, src_col: str) -> DataFrame:
         for batch in batches:
             cols: dict[str, list] = {f.name: [] for f in _RANGE_SCHEMA}
             ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
+            for row in batch_rows(batch):
                 x = _plane64(row, src_col)
                 x = x[np.isfinite(x)]
                 if x.size:
                     ap["scene_id"](row.scene_id)
                     ap["vmin"](float(x.min())); ap["vmax"](float(x.max()))
             if cols["scene_id"]:
-                yield _batch_from_cols(cols, _RANGE_SCHEMA)
-
-    from .pipeline import spread_tiles
+                yield batch_from_cols(cols, _RANGE_SCHEMA)
 
     # mapInArrow cannot column-prune: select only what the scan reads so
     # sibling plane columns never serialize through Arrow for a range agg
@@ -347,7 +338,7 @@ def scene_histograms_df(tiles: DataFrame, src_col: str,
         for batch in batches:
             cols: dict[str, list] = {f.name: [] for f in _HIST_SCHEMA}
             ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
+            for row in batch_rows(batch):
                 if row.vmin is None:
                     continue  # zero-finite scene: no histogram rows
                 x = _plane64(row, src_col)
@@ -360,7 +351,7 @@ def scene_histograms_df(tiles: DataFrame, src_col: str,
                     ap["scene_id"](row.scene_id)
                     ap["bin"](int(b)); ap["cnt"](int(c[b]))
             if cols["scene_id"]:
-                yield _batch_from_cols(cols, _HIST_SCHEMA)
+                yield batch_from_cols(cols, _HIST_SCHEMA)
 
     src = (tiles.select("scene_id", "w", "h", src_col)
            .join(F.broadcast(ranges_df), on="scene_id", how="left"))
@@ -474,7 +465,7 @@ def stretch_tiles(tiles: DataFrame, src_col: str = "lst_bytes",
         for batch in batches:
             cols: dict[str, list] = {f.name: [] for f in STRETCH_SCHEMA}
             ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
+            for row in batch_rows(batch):
                 x = _plane64(row, src_col)
                 if row.lut_bytes is None:     # zero-finite scene: no model
                     ok = np.zeros(x.shape, dtype=bool)
@@ -493,7 +484,7 @@ def stretch_tiles(tiles: DataFrame, src_col: str = "lst_bytes",
                 ap["n_valid"](int(ok.sum()))
                 ap["out_mean"](float(out[ok].mean()) if ok.any() else None)
             if cols["scene_id"]:
-                yield _batch_from_cols(cols, STRETCH_SCHEMA)
+                yield batch_from_cols(cols, STRETCH_SCHEMA)
 
     src = tiles.join(F.broadcast(luts_df), on="scene_id", how="left")
     luts = {r["scene_id"]: np.frombuffer(r["lut_bytes"], dtype=np.uint8)
@@ -562,7 +553,7 @@ def pansharpen_tiles(tiles: DataFrame, pan_col: str, band_cols: list[str],
         for batch in batches:
             cols: dict[str, list] = {f.name: [] for f in schema}
             ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
+            for row in batch_rows(batch):
                 w, h = int(row.w), int(row.h)
                 pw, ph = w * ratio, h * ratio
                 pan_bytes = getattr(row, pan_col)
@@ -600,7 +591,7 @@ def pansharpen_tiles(tiles: DataFrame, pan_col: str, band_cols: list[str],
                     ap[f"ps{i+1}_mean"](
                         float(np.nanmean(plane)) if any_ok else None)
             if cols["scene_id"]:
-                yield _batch_from_cols(cols, schema)
+                yield batch_from_cols(cols, schema)
 
     # mapInArrow cannot column-prune: ship only what the kernel reads
     src = tiles.select(
@@ -697,7 +688,7 @@ def histo_match_tiles(tiles: DataFrame, ref_scene: str,
         for batch in batches:
             cols: dict[str, list] = {f.name: [] for f in HISTO_MATCH_SCHEMA}
             ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
+            for row in batch_rows(batch):
                 x = _plane64(row, src_col)
                 out = np.full(x.shape, np.nan, dtype=np.float64)
                 if row.lut_bytes is not None:
@@ -713,7 +704,7 @@ def histo_match_tiles(tiles: DataFrame, ref_scene: str,
                 ap["n_valid"](int(ok.sum()))
                 ap["out_mean"](float(out[ok].mean()) if ok.any() else None)
             if cols["scene_id"]:
-                yield _batch_from_cols(cols, HISTO_MATCH_SCHEMA)
+                yield batch_from_cols(cols, HISTO_MATCH_SCHEMA)
 
     src = tiles.join(F.broadcast(luts_df), on="scene_id", how="left")
     return src.mapInArrow(fn, HISTO_MATCH_SCHEMA), luts_df
@@ -794,7 +785,7 @@ def ndvi_emissivity_tiles(tiles: DataFrame, red_col: str, nir_col: str,
         for batch in batches:
             cols: dict[str, list] = {f.name: [] for f in NDVI_EMIS_SCHEMA}
             ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
+            for row in batch_rows(batch):
                 w, h = int(row.w), int(row.h)
                 red = codecs.decode_f32bt(getattr(row, red_col), w, h)
                 nir = codecs.decode_f32bt(getattr(row, nir_col), w, h)
@@ -812,7 +803,7 @@ def ndvi_emissivity_tiles(tiles: DataFrame, red_col: str, nir_col: str,
                 ap["ndvi_mean"](float(np.nanmean(nd)) if m.any()
                                 else float("nan"))
             if cols["scene_id"]:
-                yield _batch_from_cols(cols, NDVI_EMIS_SCHEMA)
+                yield batch_from_cols(cols, NDVI_EMIS_SCHEMA)
 
     src = tiles.select("scene_id", "tile_x", "tile_y", "w", "h",
                        red_col, nir_col)

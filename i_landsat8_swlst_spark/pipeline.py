@@ -34,6 +34,10 @@ from pyspark.sql.types import (
 from . import codecs
 from . import constants as C
 from . import kernels as K
+from .tileops import (
+    arrow_schema, batch_from_cols, batch_rows, finite_stats, halo_place,
+    halo_plane_tiles, halo_receivers, receiver_runs,
+)
 
 _ID_RE = r"^([^/]+)/B(\d+)/(\d+)_(\d+)$"
 
@@ -174,163 +178,83 @@ PIXEL_SCHEMA = StructType([
 
 _SUBRANGE_NAMES = np.array(C.SUBRANGE_ORDER + [""], dtype=object)  # idx -1 -> ""
 
-_PA_TYPES = {
-    "string": pa.string(), "binary": pa.binary(), "int": pa.int32(),
-    "bigint": pa.int64(), "double": pa.float64(), "boolean": pa.bool_(),
-}
-
-
-def _arrow_schema(spark_schema: StructType) -> pa.Schema:
-    return pa.schema([pa.field(f.name, _PA_TYPES[f.dataType.simpleString()]) for f in spark_schema])
-
-
-def _to_batch(pdf: pd.DataFrame, spark_schema: StructType) -> pa.RecordBatch:
-    """Build an Arrow batch with exactly the declared schema (explicit casts
-    so pandas dtype drift can never change the UDF contract)."""
-    schema = _arrow_schema(spark_schema)
-    arrays = [pa.array(pdf[f.name], type=f.type) for f in schema]
-    return pa.RecordBatch.from_arrays(arrays, schema=schema)
-
-
-def _batch_from_cols(cols: dict[str, list], spark_schema: StructType) -> pa.RecordBatch:
-    """Arrow batch straight from per-column Python lists — skips the
-    pandas.DataFrame detour in the hot tile loop."""
-    schema = _arrow_schema(spark_schema)
-    return pa.RecordBatch.from_arrays(
-        [pa.array(cols[f.name], type=f.type) for f in schema], schema=schema)
-
-
-def spread_tiles(tiles: DataFrame) -> DataFrame:
-    """Round-robin repartition a tile table up to the core count when the
-    incoming layout cannot scan with enough effective parallelism.
-
-    A tile table written as one or two parquet files (a limit() write, a
-    small export) holds a handful of row groups, so no matter how many
-    byte-range splits the scheduler creates, only the 2-3 tasks whose
-    range covers a row-group midpoint read ANY data — every decode-pass
-    operator fed from it then runs near-serially regardless of cluster
-    size (measured: 4.2 s wall for 7.7 core-seconds of work on the
-    classify assignment pass; guide §2.5: unsplittable input ->
-    repartition after the read). The partition COUNT is useless for
-    detecting this (the empty splits still count), so the test is the
-    plan's size estimate: a source whose bytes cannot fill half the
-    cluster's cores at one split per core gets spread; bigger inputs —
-    production tables, bucketed layouts — pass through UNTOUCHED and
-    never pay a shuffle. Per-tile operator outputs are row-wise and do
-    not depend on placement."""
-    spark = tiles.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    try:
-        split = spark.conf.get("spark.sql.files.maxPartitionBytes")
-        split_b = int("".join(c for c in split if c.isdigit()) or 0)
-        if split.lower().endswith(("m", "mb")):
-            split_b *= 1024 * 1024
-        elif split.lower().endswith(("g", "gb")):
-            split_b *= 1024 * 1024 * 1024
-        split_b = split_b or 128 * 1024 * 1024
-        plan = tiles._jdf.queryExecution().optimizedPlan()
-        pstr = plan.toString()
-        if "Repartition" in pstr:
-            return tiles          # caller already chose a distribution
-        if "parquet" not in pstr:
-            # in-memory state (iteration rounds, test fixtures, checkpoint
-            # RDDs) is already placed by whatever produced it; spreading
-            # it would add one exchange PER ROUND to iterative operators
-            return tiles
-        size_b = int(plan.stats().sizeInBytes())
-    except Exception:
-        return tiles
-    if size_b >= (target // 2) * split_b:
-        return tiles
-    return tiles.repartition(target)
-
-
-def _coalesce_batches(batches, min_rows: int = 8192):
-    """Re-chunk an Arrow batch stream to >= min_rows rows per batch.
-
-    The session-wide maxRecordsPerBatch is sized for ~65 KB binary tile
-    rows (64/batch); point-row operators fed through the same hop would see
-    thousands of 64-row batches, and their per-batch numpy setup dominates
-    the kernel (guide §4.2: keep batches large enough for vectorization to
-    pay off). Row order is preserved — consecutive batches concatenate —
-    so operator output is row-identical, only batch boundaries move."""
-    buf: list[pa.RecordBatch] = []
-    n = 0
-    for b in batches:
-        if b.num_rows == 0:
-            continue
-        if b.num_rows >= min_rows and not buf:
-            yield b
-            continue
-        buf.append(b)
-        n += b.num_rows
-        if n >= min_rows:
-            yield from pa.Table.from_batches(buf).combine_chunks() \
-                .to_batches(max_chunksize=None)
-            buf, n = [], 0
-    if buf:
-        yield from pa.Table.from_batches(buf).combine_chunks() \
-            .to_batches(max_chunksize=None)
-
-
-def _batch_rows(batch: pa.RecordBatch):
-    """Iterate an Arrow batch as attribute-access rows without converting to
-    pandas (object boxing of 17 columns per tile showed up in the profile)."""
-    import collections
-
-    Row = collections.namedtuple("Row", batch.schema.names, rename=True)
-    return map(Row._make, zip(*(batch.column(i).to_pylist()
-                                for i in range(batch.num_columns))))
-
-
-def _finite_stats(a: np.ndarray) -> tuple[int, float | None, float | None, float | None]:
-    """(n_finite, min, max, mean) in one compaction pass — np.nanmin/nanmean
-    each copy the full array internally; for 128^2 tiles the four of them
-    cost as much as the LST polynomial itself."""
-    v = a.ravel()
-    v = v[np.isfinite(v)]
-    if v.size == 0:
-        return 0, None, None, None
-    return int(v.size), float(v.min()), float(v.max()), float(v.mean())
-
-
 _CLOUD_VALUES = np.array(C.DEFAULT_CLOUD_QA_VALUES, dtype=np.float64)
 
 
-# Max tiles stacked per fused-kernel call. Round-3 interleaved A/B
-# (jobs/bench_kernel_sweep.py: ALL arms round-robin in ONE process, 5
-# passes/arm, 32 workers, sf0.1-scale input — the only protocol that puts
-# every arm in the same host-steal weather): per-arm minima
-# stack1 4.56s / stack4 4.42s / stack8 4.65s / stack16 4.69s / stack64 4.83s
-# (88.3 / 91.1 / 86.5 / 85.9 / 83.4 Mpx/s) — the arms sit within 9%, so the
-# earlier cross-session swings (5.1s -> 8.2s -> 13.6s for ONE config) were
-# environmental steal, not tuning. 4 wins on both min and median: enough
-# stacking to amortize numpy dispatch while the (4, 4, h, w) float64 plane
-# family stays cache-resident per worker. Full table: BENCH/KERNEL_SWEEP.md.
+# Max tiles stacked per fused-kernel call. Interleaved in-process A/B runs
+# of stacks 1/4/8/16/64 (protocol and table: BENCH/KERNEL_SWEEP.md) put
+# every arm within 9% of the others, and the winner moves between runs (4
+# on min and median in one, 8 on minima in the committed table): the choice
+# sits inside host noise. 4 amortizes numpy dispatch while the
+# (4, 4, h, w) float64 plane family stays cache-resident per worker.
 _KERNEL_STACK = 4
 
+_PLANE = "plane"  # emissivity group key: load() returns per-pixel planes
 
-def _run_array_kernel_batch(items: list, window: int) -> list[dict]:
-    """Stacked fused-kernel dispatch over already-decoded arrays.
 
-    items: list of (a10, a11, meta_tuple, e10, e11, qa_or_None, bt_input);
-    rows are grouped by (shape, dtype, MTL constants, emissivity pair, QA
-    presence, bt_input), each group stacked into one (k, h, w) kernel call
-    (bit-identical to per-tile — see _run_tile_kernel_batch). Returns result
-    dicts in input order.
+def _bt_input(fmt10: str, fmt11: str) -> bool:
+    """True when a band pair carries Kelvin BT (the reference's t10=/t11=
+    path); a pair mixing DN and BT is a contract violation."""
+    bt_in = fmt10 == codecs.FMT_BT
+    if bt_in != (fmt11 == codecs.FMT_BT):
+        raise ValueError(f"mixed DN/BT band pair: fmt_b10={fmt10!r} fmt_b11={fmt11!r}")
+    return bt_in
+
+
+def _pair_key(row, emis) -> tuple:
+    """_fused_dispatch group key of an enriched band-pair row: (w, h) and
+    the fmt pair fix the decoded planes' shape and dtype."""
+    return ((int(row.w), int(row.h), row.fmt_b10, row.fmt_b11),
+            tuple(float(getattr(row, k)) for k in META_COLS),
+            getattr(row, "bytes_qa", None) is not None,
+            _bt_input(row.fmt_b10, row.fmt_b11), emis)
+
+
+def _scalar_key(row) -> tuple:
+    """Group key of a row carrying scalar landcover-class emissivities."""
+    return _pair_key(row, (float(row.emissivity_b10), float(row.emissivity_b11)))
+
+
+def _decode_pair(row) -> tuple:
+    """(dn10, dn11, qa) planes of an enriched band-pair row; qa is None
+    for a row without a QA tile."""
+    w, h = int(row.w), int(row.h)
+    qa = getattr(row, "bytes_qa", None)
+    return (codecs.decode_tile_dn(row.bytes_b10, w, h, row.fmt_b10),
+            codecs.decode_tile_dn(row.bytes_b11, w, h, row.fmt_b11),
+            None if qa is None else codecs.decode_u16le(qa, w, h))
+
+
+def _fused_dispatch(rows: list, window: int, key, load) -> list[dict | None]:
+    """Run kernels.fused_lst_kernel over a list of tiles, stacked.
+
+    ``key(row)`` -> (shape, meta_vals, has_qa, bt_input, emis): ``shape``
+    is any hashable that fixes the loaded planes' shape and dtype; ``emis``
+    is a scalar (e10, e11) pair, ``_PLANE`` when ``load`` also returns
+    per-pixel emissivity planes, or None for a tile with no emissivity
+    (its result is None: it never reaches the kernel).
+    ``load(row)`` -> (a10, a11, qa[, e10, e11]) planes, qa None without QA.
+
+    Rows sharing a key are stacked ``_KERNEL_STACK`` at a time into ONE
+    (k, h, w) kernel call — bit-identical to the per-tile form (cwv_ratio
+    is leading-dim generic; every other stage is elementwise or a gather)
+    while the ~86 numpy dispatches per tile collapse to ~86 per stack.
+    ``load`` runs inside the stack loop, so only one stack of decoded
+    planes is alive at a time. Returns per-row results in input order.
     """
     groups: dict[tuple, list[int]] = {}
-    for i, (a10, _a11, meta_vals, e10, e11, qa, bt_in) in enumerate(items):
-        key = (a10.shape, a10.dtype.str, meta_vals, e10, e11, qa is not None, bt_in)
-        groups.setdefault(key, []).append(i)
-    out: list[dict | None] = [None] * len(items)
-    for (_shape, _dt, meta_vals, e10, e11, has_qa, bt_in), gidxs in groups.items():
+    for i, row in enumerate(rows):
+        groups.setdefault(key(row), []).append(i)
+    out: list[dict | None] = [None] * len(rows)
+    for (_shape, meta_vals, has_qa, bt_in, emis), gidxs in groups.items():
+        if emis is None:
+            continue
         meta = dict(zip(META_COLS, meta_vals))
         for s in range(0, len(gidxs), _KERNEL_STACK):
             idxs = gidxs[s : s + _KERNEL_STACK]
-            a10 = np.stack([items[i][0] for i in idxs])
-            a11 = np.stack([items[i][1] for i in idxs])
-            qa = np.stack([items[i][5] for i in idxs]) if has_qa else None
+            a10, a11, qa, *e = (None if p[0] is None else np.stack(p)
+                                for p in zip(*(load(rows[i]) for i in idxs)))
+            e10, e11 = e if emis == _PLANE else emis
             r = K.fused_lst_kernel(
                 a10, a11, meta, e10=e10, e11=e11, window=window,
                 qa=qa, cloud_values=_CLOUD_VALUES if has_qa else None,
@@ -338,57 +262,53 @@ def _run_array_kernel_batch(items: list, window: int) -> list[dict]:
             )
             for j, i in enumerate(idxs):
                 out[i] = {k: v[j] for k, v in r.items()}
-    return out  # type: ignore[return-value]
+    return out
 
 
-def _run_tile_kernel_batch(rows: list, window: int,
-                           stack: int | None = None) -> list[dict]:
-    """Run the fused kernel over a whole Arrow batch of tile rows.
+def _tile_ident(row) -> tuple:
+    """The identity prefix of a TILE_SCHEMA row for an enriched pair row."""
+    return (row.image_id_b10, row.scene_id, row.tile_x, row.tile_y,
+            row.w, row.h, row.caption_b10)
 
-    Rows are grouped by (w, h, fmt pair, MTL constants, emissivity pair,
-    QA presence); each homogeneous group is decoded into ONE (k, h, w)
-    stack and pushed through kernels.fused_lst_kernel in a single call —
-    bit-identical to the per-tile form (cwv_ratio is leading-dim generic;
-    every other stage is elementwise or a gather) while the ~86 numpy
-    dispatches per tile collapse to ~86 per group. Returns per-row result
-    dicts in input order; rows a group can't absorb (heterogeneous shapes
-    within a 1-row remainder etc.) still work — a group of one is just the
-    old path with an extra leading axis of 1.
-    """
-    stack = _KERNEL_STACK if stack is None else stack
-    groups: dict[tuple, list[int]] = {}
-    for i, row in enumerate(rows):
-        qa_bytes = getattr(row, "bytes_qa", None)
-        key = (int(row.w), int(row.h), row.fmt_b10, row.fmt_b11,
-               tuple(float(getattr(row, k)) for k in META_COLS),
-               float(row.emissivity_b10), float(row.emissivity_b11),
-               qa_bytes is not None)
-        groups.setdefault(key, []).append(i)
-    out: list[dict | None] = [None] * len(rows)
-    for (w, h, fmt10, fmt11, meta_vals, e10, e11, has_qa), gidxs in groups.items():
-        meta = dict(zip(META_COLS, meta_vals))
-        bt_in = fmt10 == codecs.FMT_BT
-        if bt_in != (fmt11 == codecs.FMT_BT):
-            raise ValueError(f"mixed DN/BT band pair: fmt_b10={fmt10!r} fmt_b11={fmt11!r}")
-        for s in range(0, len(gidxs), stack):
-            idxs = gidxs[s : s + stack]
-            dn10 = np.stack([codecs.decode_tile_dn(rows[i].bytes_b10, w, h, fmt10) for i in idxs])
-            dn11 = np.stack([codecs.decode_tile_dn(rows[i].bytes_b11, w, h, fmt11) for i in idxs])
-            qa = (np.stack([codecs.decode_u16le(rows[i].bytes_qa, w, h) for i in idxs])
-                  if has_qa else None)
-            r = K.fused_lst_kernel(
-                dn10, dn11, meta, e10=e10, e11=e11, window=window,
-                qa=qa, cloud_values=_CLOUD_VALUES if has_qa else None,
-                bt_input=bt_in,
-            )
-            for j, i in enumerate(idxs):
-                out[i] = {k: v[j] for k, v in r.items()}
-    return out  # type: ignore[return-value]
+
+def _tile_cols(tiles, emit_arrays: bool = True,
+              celsius: bool = False) -> dict[str, tuple]:
+    """The one TILE_SCHEMA emitter, as batch_from_cols columns. ``tiles``
+    yields (identity, planes): identity is the (image_id, scene_id, tile_x,
+    tile_y, w, h, caption) prefix, planes a fused-kernel result cropped to
+    (h, w), or None for a tile refused without a kernel run (every output
+    plane NaN)."""
+    enc = (lambda a: a.astype("<f4").tobytes()) if emit_arrays else (lambda a: b"")
+    out = []
+    for ident, r in tiles:
+        if r is None:
+            r = dict.fromkeys(("lst_k", "lst_c", "cwv", "bt10", "bt11"),
+                              np.full((ident[5], ident[4]), np.nan))
+        lst = r["lst_c"] if celsius else r["lst_k"]
+        out.append((*ident, enc(lst), enc(r["cwv"]), *finite_stats(lst),
+                    *(finite_stats(r[k])[3] for k in ("cwv", "bt10", "bt11"))))
+    return dict(zip(TILE_SCHEMA.names, zip(*out)))
+
+
+def _tile_stream(batches: Iterator[pa.RecordBatch], window: int, key, load,
+                 emit_arrays: bool, celsius: bool) -> Iterator[pa.RecordBatch]:
+    """TILE_SCHEMA batches for a stream of enriched band-pair batches.
+
+    The kernel results stay unnamed, so they are freed before the yield and
+    a worker never holds two batches of planes. The emitted columns stay
+    bound across it: freed together with the results, they let glibc trim
+    the heap top, and the next batch's kernel then page-faults its arrays
+    back in (~30% slower kernel, measured in-process on 128 px tiles)."""
+    for batch in batches:
+        rows = list(batch_rows(batch))
+        if rows:
+            cols = _tile_cols(zip(map(_tile_ident, rows), _fused_dispatch(
+                rows, window, key, load)), emit_arrays, celsius)
+            yield batch_from_cols(cols, TILE_SCHEMA)
 
 
 def lst_tiles(enriched: DataFrame, window: int = C.DEFAULT_CWV_WINDOW,
-              emit_arrays: bool = True, celsius: bool = False,
-              kernel_stack: int | None = None) -> DataFrame:
+              emit_arrays: bool = True, celsius: bool = False) -> DataFrame:
     """Fused raster kernel -> tile-level LST/CWV arrays + stats (C11).
 
     emit_arrays=False keeps the byte columns empty for stats-only consumers:
@@ -399,34 +319,8 @@ def lst_tiles(enriched: DataFrame, window: int = C.DEFAULT_CWV_WINDOW,
     celsius=True emits the lst arrays + stats in deg C instead of K — the
     reference's ``-c`` flag ([U] i.landsat8.swlst.py); conversion happens in
     the kernel (C10), not as a post-pass."""
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols: dict[str, list] = {f.name: [] for f in TILE_SCHEMA}
-            ap = {k: v.append for k, v in cols.items()}
-            rows = list(_batch_rows(batch))
-            for row, r in zip(rows, _run_tile_kernel_batch(rows, window,
-                                                           stack=kernel_stack)):
-                lst = r["lst_c"] if celsius else r["lst_k"]
-                n_valid, lst_min, lst_max, lst_mean = _finite_stats(lst)
-                _, _, _, cwv_mean = _finite_stats(r["cwv"])
-                _, _, _, bt10_mean = _finite_stats(r["bt10"])
-                _, _, _, bt11_mean = _finite_stats(r["bt11"])
-                ap["image_id"](row.image_id_b10)
-                ap["scene_id"](row.scene_id)
-                ap["tile_x"](row.tile_x); ap["tile_y"](row.tile_y)
-                ap["w"](row.w); ap["h"](row.h)
-                ap["caption"](row.caption_b10)
-                ap["lst_bytes"](lst.astype("<f4").tobytes() if emit_arrays else b"")
-                ap["cwv_bytes"](r["cwv"].astype("<f4").tobytes() if emit_arrays else b"")
-                ap["n_valid"](n_valid)
-                ap["lst_min"](lst_min); ap["lst_max"](lst_max); ap["lst_mean"](lst_mean)
-                ap["cwv_mean"](cwv_mean)
-                ap["bt10_mean"](bt10_mean); ap["bt11_mean"](bt11_mean)
-            if cols["image_id"]:
-                yield _batch_from_cols(cols, TILE_SCHEMA)
-
-    return enriched.mapInArrow(fn, TILE_SCHEMA)
+    return enriched.mapInArrow(lambda batches: _tile_stream(
+        batches, window, _scalar_key, _decode_pair, emit_arrays, celsius), TILE_SCHEMA)
 
 
 def lst_tiles_pixel_emissivity(enriched: DataFrame, emis_tiles: DataFrame,
@@ -458,84 +352,19 @@ def lst_tiles_pixel_emissivity(enriched: DataFrame, emis_tiles: DataFrame,
         emis_tiles.select("scene_id", "tile_x", "tile_y", *ecols),
         on=["scene_id", "tile_x", "tile_y"], how="left")
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols: dict[str, list] = {f.name: [] for f in TILE_SCHEMA}
-            ap = {k: v.append for k, v in cols.items()}
-            rows = list(_batch_rows(batch))
-            # group by everything the stacked kernel requires to be
-            # homogeneous; emissivity is per-row array data, not a key
-            groups: dict[tuple, list[int]] = {}
-            for i, row in enumerate(rows):
-                qa_bytes = getattr(row, "bytes_qa", None)
-                key = (int(row.w), int(row.h), row.fmt_b10, row.fmt_b11,
-                       tuple(float(getattr(row, k)) for k in META_COLS),
-                       qa_bytes is not None,
-                       getattr(row, e10_col) is None
-                       or (e11_col is not None
-                           and getattr(row, e11_col) is None))
-                groups.setdefault(key, []).append(i)
-            out: list[dict | None] = [None] * len(rows)
-            for (w, h, fmt10, fmt11, meta_vals, has_qa,
-                 no_emis), gidxs in groups.items():
-                if no_emis:
-                    continue          # NaN planes emitted below
-                meta = dict(zip(META_COLS, meta_vals))
-                bt_in = fmt10 == codecs.FMT_BT
-                if bt_in != (fmt11 == codecs.FMT_BT):
-                    raise ValueError(
-                        f"mixed DN/BT band pair: fmt_b10={fmt10!r} "
-                        f"fmt_b11={fmt11!r}")
-                for s in range(0, len(gidxs), _KERNEL_STACK):
-                    idxs = gidxs[s : s + _KERNEL_STACK]
-                    dn10 = np.stack([codecs.decode_tile_dn(
-                        rows[i].bytes_b10, w, h, fmt10) for i in idxs])
-                    dn11 = np.stack([codecs.decode_tile_dn(
-                        rows[i].bytes_b11, w, h, fmt11) for i in idxs])
-                    qa = (np.stack([codecs.decode_u16le(
-                        rows[i].bytes_qa, w, h) for i in idxs])
-                        if has_qa else None)
-                    e10 = np.stack([codecs.decode_f32bt(
-                        getattr(rows[i], e10_col), w, h) for i in idxs])
-                    e11 = (np.stack([codecs.decode_f32bt(
-                        getattr(rows[i], e11_col), w, h) for i in idxs])
-                        if e11_col else e10)
-                    r = K.fused_lst_kernel(
-                        dn10, dn11, meta, e10=e10, e11=e11, window=window,
-                        qa=qa, cloud_values=_CLOUD_VALUES if has_qa else None,
-                        bt_input=bt_in)
-                    for j, i in enumerate(idxs):
-                        out[i] = {k: v[j] for k, v in r.items()}
-            for i, row in enumerate(rows):
-                r = out[i]
-                w, h = int(row.w), int(row.h)
-                if r is None:         # no emissivity tile: LST refused
-                    nanp = np.full((h, w), np.nan)
-                    r = {"lst_k": nanp, "lst_c": nanp, "cwv": nanp,
-                         "bt10": nanp, "bt11": nanp}
-                lst = r["lst_c"] if celsius else r["lst_k"]
-                n_valid, lst_min, lst_max, lst_mean = _finite_stats(lst)
-                _, _, _, cwv_mean = _finite_stats(r["cwv"])
-                _, _, _, bt10_mean = _finite_stats(r["bt10"])
-                _, _, _, bt11_mean = _finite_stats(r["bt11"])
-                ap["image_id"](row.image_id_b10)
-                ap["scene_id"](row.scene_id)
-                ap["tile_x"](row.tile_x); ap["tile_y"](row.tile_y)
-                ap["w"](row.w); ap["h"](row.h)
-                ap["caption"](row.caption_b10)
-                ap["lst_bytes"](lst.astype("<f4").tobytes()
-                                if emit_arrays else b"")
-                ap["cwv_bytes"](r["cwv"].astype("<f4").tobytes()
-                                if emit_arrays else b"")
-                ap["n_valid"](n_valid)
-                ap["lst_min"](lst_min); ap["lst_max"](lst_max)
-                ap["lst_mean"](lst_mean)
-                ap["cwv_mean"](cwv_mean)
-                ap["bt10_mean"](bt10_mean); ap["bt11_mean"](bt11_mean)
-            if cols["image_id"]:
-                yield _batch_from_cols(cols, TILE_SCHEMA)
+    def key(row) -> tuple:
+        missing = getattr(row, e10_col) is None or (
+            e11_col is not None and getattr(row, e11_col) is None)
+        return _pair_key(row, None if missing else _PLANE)
 
-    return joined.mapInArrow(fn, TILE_SCHEMA)
+    def load(row) -> tuple:
+        w, h = int(row.w), int(row.h)
+        e10 = codecs.decode_f32bt(getattr(row, e10_col), w, h)
+        e11 = codecs.decode_f32bt(getattr(row, e11_col), w, h) if e11_col else e10
+        return (*_decode_pair(row), e10, e11)
+
+    return joined.mapInArrow(lambda batches: _tile_stream(
+        batches, window, key, load, emit_arrays, celsius), TILE_SCHEMA)
 
 
 def lst_pixels(
@@ -550,15 +379,16 @@ def lst_pixels(
     north-up affine over the scene footprint.
     """
 
-    pa_schema = _arrow_schema(PIXEL_SCHEMA)
+    pa_schema = arrow_schema(PIXEL_SCHEMA)
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         # one output RecordBatch per tile (mapInArrow may yield many per
         # input batch): numpy-native columns go to Arrow zero-copy, no
         # pandas detour, no per-batch concat
         for batch in batches:
-            rows = list(_batch_rows(batch))
-            for row, r in zip(rows, _run_tile_kernel_batch(rows, window)):
+            rows = list(batch_rows(batch))
+            for row, r in zip(rows, _fused_dispatch(rows, window, _scalar_key,
+                                                    _decode_pair)):
                 w, h = int(row.w), int(row.h)
                 lst = r["lst_k"].ravel()
                 keep = np.isfinite(lst) if valid_only else np.ones(lst.size, bool)
@@ -646,9 +476,6 @@ def full_pixel_pipeline(
                                  k=knn_k, s2_level=s2_level, how="left")
 
 
-HALO_TILE_SCHEMA = TILE_SCHEMA  # same output contract as lst_tiles
-
-
 def lst_tiles_halo(enriched: DataFrame, window: int = C.DEFAULT_CWV_WINDOW) -> DataFrame:
     """Fused kernel with cross-tile halo exchange: scene-mosaic semantics.
 
@@ -661,11 +488,11 @@ def lst_tiles_halo(enriched: DataFrame, window: int = C.DEFAULT_CWV_WINDOW) -> D
                              r-wide DN edge strips each neighbor needs
                              (shuffle volume ~ (1 + 2r(w+h)/(wh))x, NOT 9x);
       shuffle:               hash on the receiving tile key;
-      pass 2 (applyInPandas): assemble the (h+2r, w+2r) padded arrays
+      pass 2 (mapInArrow):   assemble the (h+2r, w+2r) padded arrays
                              (missing neighbors = NaN = true scene edge),
                              run the same fused kernel, crop the halo.
 
-    Catalyst sees a plain groupBy — AQE/salting applies as usual.
+    Catalyst sees a plain repartition — AQE/salting applies as usual.
     """
     r = window // 2
     strip_schema = StructType([
@@ -688,19 +515,13 @@ def lst_tiles_halo(enriched: DataFrame, window: int = C.DEFAULT_CWV_WINDOW) -> D
         StructField("emissivity_b11", DoubleType()),
     ] + [StructField(k, DoubleType()) for k in META_COLS])
 
-    s_names = [f.name for f in strip_schema]
-
     def emit_strips(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            cols: dict[str, list] = {n: [] for n in s_names}
+            cols: dict[str, list] = {f.name: [] for f in strip_schema}
             ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
+            for row in batch_rows(batch):
                 w, h = int(row.w), int(row.h)
-                bt_in = row.fmt_b10 == codecs.FMT_BT
-                if bt_in != (row.fmt_b11 == codecs.FMT_BT):
-                    raise ValueError(
-                        f"mixed DN/BT band pair: fmt_b10={row.fmt_b10!r} "
-                        f"fmt_b11={row.fmt_b11!r}")
+                bt_in = _bt_input(row.fmt_b10, row.fmt_b11)
                 # BT tiles carry float Kelvin: pieces travel as f32le and the
                 # bt flag tells assembly to skip DN->BT (same contract as the
                 # batch path's bt_input)
@@ -711,54 +532,59 @@ def lst_tiles_halo(enriched: DataFrame, window: int = C.DEFAULT_CWV_WINDOW) -> D
                 dn10 = np.asarray(codecs.decode_tile_dn(row.bytes_b10, w, h, row.fmt_b10), dtype=piece_dt)
                 dn11 = np.asarray(codecs.decode_tile_dn(row.bytes_b11, w, h, row.fmt_b11), dtype=piece_dt)
                 meta = {k: float(getattr(row, k)) for k in META_COLS}
-                for dx in (-1, 0, 1):
-                    for dy in (-1, 0, 1):
-                        rx, ry = row.tile_x + dx, row.tile_y + dy
-                        if rx < 0 or ry < 0:
-                            continue
-                        center = dx == 0 and dy == 0
-                        if center and passthrough:
-                            b10, b11, pw, ph = row.bytes_b10, row.bytes_b11, w, h
-                        else:
-                            # slice of THIS tile that tile (rx, ry) needs
-                            xs = slice(None) if dx == 0 else (slice(w - r, w) if dx == 1 else slice(0, r))
-                            ys = slice(None) if dy == 0 else (slice(h - r, h) if dy == 1 else slice(0, r))
-                            p10 = np.ascontiguousarray(dn10[ys, xs])
-                            b10, b11 = p10.tobytes(), np.ascontiguousarray(dn11[ys, xs]).tobytes()
-                            ph, pw = p10.shape
-                        ap["scene_id"](row.scene_id); ap["rx"](rx); ap["ry"](ry)
-                        ap["dx"](dx); ap["dy"](dy)
-                        ap["piece10"](b10); ap["piece11"](b11)
-                        ap["pw"](pw); ap["ph"](ph)
-                        ap["bt"](1 if bt_in else 0)
-                        ap["image_id"](row.image_id_b10 if center else None)
-                        ap["caption"](row.caption_b10 if center else None)
-                        ap["w"](w); ap["h"](h)
-                        ap["emissivity_b10"](float(row.emissivity_b10) if center else None)
-                        ap["emissivity_b11"](float(row.emissivity_b11) if center else None)
-                        for k in META_COLS:
-                            ap[k](meta[k] if center else None)
+                for dx, dy, rx, ry, win in halo_receivers(row.tile_x, row.tile_y, w, h, r):
+                    center = dx == 0 and dy == 0
+                    if center and passthrough:
+                        b10, b11, pw, ph = row.bytes_b10, row.bytes_b11, w, h
+                    else:
+                        p10 = np.ascontiguousarray(dn10[win])
+                        b10, b11 = p10.tobytes(), np.ascontiguousarray(dn11[win]).tobytes()
+                        ph, pw = p10.shape
+                    ap["scene_id"](row.scene_id); ap["rx"](rx); ap["ry"](ry)
+                    ap["dx"](dx); ap["dy"](dy)
+                    ap["piece10"](b10); ap["piece11"](b11)
+                    ap["pw"](pw); ap["ph"](ph)
+                    ap["bt"](1 if bt_in else 0)
+                    ap["image_id"](row.image_id_b10 if center else None)
+                    ap["caption"](row.caption_b10 if center else None)
+                    ap["w"](w); ap["h"](h)
+                    ap["emissivity_b10"](float(row.emissivity_b10) if center else None)
+                    ap["emissivity_b11"](float(row.emissivity_b11) if center else None)
+                    for k in META_COLS:
+                        ap[k](meta[k] if center else None)
             if cols["scene_id"]:
-                yield _batch_from_cols(cols, strip_schema)
+                yield batch_from_cols(cols, strip_schema)
 
     strips = enriched.mapInArrow(emit_strips, strip_schema)
 
     # assemble: shuffle on the receiving tile key, sort within partitions so
     # each tile's strips are contiguous, then stream-assemble in mapInArrow —
     # no per-group pandas machinery (FlatMapGroupsInPandas paid ~1 ms/group
-    # of 9 rows), output batched 64 tiles at a time like lst_tiles.
+    # of 9 rows), output batched _KERNEL_STACK tiles at a time.
     parts = strips.repartition(F.col("scene_id"), F.col("rx"), F.col("ry")) \
                   .sortWithinPartitions("scene_id", "rx", "ry")
 
-    def assemble_stream(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        pending: list = []  # (center_row, pad10, pad11, bt_input) awaiting a stacked kernel run
+    def halo_key(t) -> tuple:
+        c, pad10, _ = t
+        return (pad10.shape, tuple(float(getattr(c, k)) for k in META_COLS),
+                False, bool(c.bt), (float(c.emissivity_b10), float(c.emissivity_b11)))
 
-        def assemble(acc: list):
-            """Mosaic one tile's 9 strips into NaN-padded planes (no kernel)."""
+    def emit(pending: list) -> pa.RecordBatch:
+        # pads are float, so BT takes the arithmetic path; the kernel runs
+        # on the padded planes and the emitter gets the halo cropped off
+        res = _fused_dispatch(pending, window, halo_key, lambda t: (t[1], t[2], None))
+        return batch_from_cols(_tile_cols(
+            ((c.image_id, c.scene_id, int(c.rx), int(c.ry), int(c.w), int(c.h), c.caption),
+             {k: v[r:r + int(c.h), r:r + int(c.w)] for k, v in p.items()})
+            for (c, _, _), p in zip(pending, res)), TILE_SCHEMA)
+
+    def assemble_stream(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        pending: list = []  # (center_row, pad10, pad11) awaiting a stacked kernel run
+        for acc in receiver_runs(batches):
             center = next((s for s in acc if s.dx == 0 and s.dy == 0
                            and s.image_id is not None), None)
             if center is None:
-                return None  # halo strips for a tile outside the input (scene edge)
+                continue  # halo strips for a tile outside the input (scene edge)
             for s in acc:
                 # cross-tile analog of the per-tile mixed DN/BT guard in
                 # emit_strips: a neighbor strip whose bt flag differs from
@@ -774,71 +600,15 @@ def lst_tiles_halo(enriched: DataFrame, window: int = C.DEFAULT_CWV_WINDOW) -> D
             pad10 = np.full((h + 2 * r, w + 2 * r), np.nan)
             pad11 = np.full((h + 2 * r, w + 2 * r), np.nan)
             for s in acc:
-                # sender = receiver - (dx,dy): a dx=+1 piece came from the
-                # left neighbor, so it lands on the padded-left strip, etc.
-                x0 = 0 if s.dx == 1 else (r + w if s.dx == -1 else r)
-                y0 = 0 if s.dy == 1 else (r + h if s.dy == -1 else r)
                 dt = "<f4" if s.bt else "<u2"
-                pad10[y0:y0 + s.ph, x0:x0 + s.pw] = \
-                    np.frombuffer(s.piece10, dtype=dt).reshape(s.ph, s.pw)
-                pad11[y0:y0 + s.ph, x0:x0 + s.pw] = \
-                    np.frombuffer(s.piece11, dtype=dt).reshape(s.ph, s.pw)
-            return (center, pad10, pad11, bool(center.bt))
-
-        def emit_pending() -> pa.RecordBatch:
-            # one stacked kernel family per flush (same bit-identity argument
-            # as _run_tile_kernel_batch; pads are float so BT takes the
-            # arithmetic path, stacked elementwise)
-            cols: dict[str, list] = {f.name: [] for f in TILE_SCHEMA}
-            ap = {k: v.append for k, v in cols.items()}
-            items = [
-                (p10, p11,
-                 tuple(float(getattr(c, k)) for k in META_COLS),
-                 float(c.emissivity_b10), float(c.emissivity_b11), None, bt_in)
-                for c, p10, p11, bt_in in pending
-            ]
-            for (center, _p10, _p11, _bt), res in zip(
-                    pending, _run_array_kernel_batch(items, window)):
-                w, h = int(center.w), int(center.h)
-                lst = res["lst_k"][r:r + h, r:r + w]
-                cwv = res["cwv"][r:r + h, r:r + w]
-                n_valid, lst_min, lst_max, lst_mean = _finite_stats(lst)
-                _, _, _, cwv_mean = _finite_stats(cwv)
-                _, _, _, bt10_mean = _finite_stats(res["bt10"][r:r + h, r:r + w])
-                _, _, _, bt11_mean = _finite_stats(res["bt11"][r:r + h, r:r + w])
-                ap["image_id"](center.image_id); ap["scene_id"](center.scene_id)
-                ap["tile_x"](int(center.rx)); ap["tile_y"](int(center.ry))
-                ap["w"](w); ap["h"](h); ap["caption"](center.caption)
-                ap["lst_bytes"](lst.astype("<f4").tobytes())
-                ap["cwv_bytes"](cwv.astype("<f4").tobytes())
-                ap["n_valid"](n_valid)
-                ap["lst_min"](lst_min); ap["lst_max"](lst_max); ap["lst_mean"](lst_mean)
-                ap["cwv_mean"](cwv_mean)
-                ap["bt10_mean"](bt10_mean); ap["bt11_mean"](bt11_mean)
-            pending.clear()
-            return _batch_from_cols(cols, TILE_SCHEMA)
-
-        cur_key = None
-        acc: list = []
-        for batch in batches:
-            for s in _batch_rows(batch):
-                k = (s.scene_id, s.rx, s.ry)
-                if k != cur_key:
-                    if acc:
-                        t = assemble(acc)
-                        if t is not None:
-                            pending.append(t)
-                        acc = []
-                    cur_key = k
-                    if len(pending) >= _KERNEL_STACK:
-                        yield emit_pending()
-                acc.append(s)
-        if acc:
-            t = assemble(acc)
-            if t is not None:
-                pending.append(t)
+                halo_place(pad10, s.dx, s.dy, np.frombuffer(s.piece10, dtype=dt).reshape(s.ph, s.pw), r)
+                halo_place(pad11, s.dx, s.dy, np.frombuffer(s.piece11, dtype=dt).reshape(s.ph, s.pw), r)
+            pending.append((center, pad10, pad11))
+            if len(pending) >= _KERNEL_STACK:
+                yield emit(pending)
+                pending = []
         if pending:
-            yield emit_pending()
+            yield emit(pending)
 
     return parts.mapInArrow(assemble_stream, TILE_SCHEMA)
 
@@ -975,7 +745,7 @@ def focal_stats_tiles(tiles: DataFrame, window: int = 5,
         for batch in batches:
             cols: dict[str, list] = {f.name: [] for f in FOCAL_SCHEMA}
             ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
+            for row in batch_rows(batch):
                 w, h = int(row.w), int(row.h)
                 plane = codecs.decode_f32bt(getattr(row, col), w + 2 * m, h + 2 * m)
                 r = K.focal_stats(plane, window=window)
@@ -991,7 +761,7 @@ def focal_stats_tiles(tiles: DataFrame, window: int = 5,
                 ap["max_bytes"](np.ascontiguousarray(r["max"]).astype("<f4").tobytes())
                 ap["n_valid"](int((r["count"] > 0).sum()))
             if cols["image_id"]:
-                yield _batch_from_cols(cols, FOCAL_SCHEMA)
+                yield batch_from_cols(cols, FOCAL_SCHEMA)
 
     return src.mapInArrow(fn, FOCAL_SCHEMA)
 
@@ -1067,7 +837,7 @@ def gradient_tiles(tiles: DataFrame, cell: float = 1.0,
         for batch in batches:
             cols: dict[str, list] = {f.name: [] for f in GRADIENT_SCHEMA}
             ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
+            for row in batch_rows(batch):
                 w, h = int(row.w), int(row.h)
                 plane = codecs.decode_f32bt(getattr(row, col),
                                             w + 2 * m, h + 2 * m).astype(np.float64)
@@ -1075,7 +845,7 @@ def gradient_tiles(tiles: DataFrame, cell: float = 1.0,
                 if m:
                     crop = (slice(m, m + h), slice(m, m + w))
                     r = {k: np.ascontiguousarray(v[crop]) for k, v in r.items()}
-                n_valid, _, smax, _ = _finite_stats(r["slope_deg"])
+                n_valid, _, smax, _ = finite_stats(r["slope_deg"])
                 ap["image_id"](getattr(row, "image_id", None))
                 ap["scene_id"](row.scene_id)
                 ap["tile_x"](row.tile_x); ap["tile_y"](row.tile_y)
@@ -1086,151 +856,9 @@ def gradient_tiles(tiles: DataFrame, cell: float = 1.0,
                 ap["n_valid"](n_valid)
                 ap["slope_max"](smax)
             if cols["scene_id"]:
-                yield _batch_from_cols(cols, GRADIENT_SCHEMA)
+                yield batch_from_cols(cols, GRADIENT_SCHEMA)
 
     return src.mapInArrow(fn, GRADIENT_SCHEMA)
-
-
-HALO_PLANE_SCHEMA = StructType([
-    StructField("image_id", StringType()),
-    StructField("scene_id", StringType()),
-    StructField("tile_x", IntegerType()),
-    StructField("tile_y", IntegerType()),
-    StructField("w", IntegerType()),
-    StructField("h", IntegerType()),
-    StructField("pad_bytes", BinaryType()),   # (h+2r, w+2r) float LE
-                                              # (dtype of the src plane)
-])
-
-
-def halo_plane_tiles(tiles: DataFrame, r: int,
-                     src_col: str = "lst_bytes",
-                     dtype: str = "<f4") -> DataFrame:
-    """Generic halo exchange for ONE float plane column of a tile table:
-    every tile comes back with an (h+2r, w+2r) NaN-padded plane holding
-    r pixels of each 8-neighbor (missing neighbor = NaN = true scene
-    edge). The window/gradient operators consume this to get EXACT
-    whole-scene-mosaic semantics from tile-local kernels.
-
-    ``dtype`` is the plane encoding of ``src_col`` ("<f4" default; "<f8"
-    for planes where f32 rounding is not acceptable, e.g. upstream-cell
-    counts in hydro.flow_accum_tiles that must stay exact past 2**24).
-    ``pad_bytes`` comes back in the same dtype.
-
-    Same shape as the band-pair halo in lst_tiles_halo: strips are
-    r-wide (shuffle ~ (1 + 2r(w+h)/(wh)) x the plane bytes, not 9x), the
-    shuffle is a plain repartition on the receiving tile key, assembly
-    streams sorted partitions.
-    """
-    if r < 1:
-        raise ValueError(f"halo margin must be >= 1, got {r}")
-    if dtype not in ("<f4", "<f8"):
-        raise ValueError(f"unsupported plane dtype {dtype!r}")
-    # NOTE: no spread_tiles here — the halo's own repartition spreads every
-    # downstream consumer, and the strip emit is cheap enough that paying
-    # an extra plane shuffle to parallelize it measures net-negative
-
-    def _dec(buf: bytes, w: int, h: int) -> np.ndarray:
-        return np.frombuffer(buf, dtype=dtype).reshape(h, w)
-    strip_schema = StructType([
-        StructField("scene_id", StringType()),
-        StructField("rx", IntegerType()),
-        StructField("ry", IntegerType()),
-        StructField("dx", IntegerType()),
-        StructField("dy", IntegerType()),
-        StructField("piece", BinaryType()),
-        StructField("pw", IntegerType()),
-        StructField("ph", IntegerType()),
-        StructField("image_id", StringType()),   # center-only passthrough
-        StructField("w", IntegerType()),
-        StructField("h", IntegerType()),
-    ])
-    s_names = [f.name for f in strip_schema]
-
-    def emit(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols: dict[str, list] = {n: [] for n in s_names}
-            ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
-                w, h = int(row.w), int(row.h)
-                if w < r or h < r:
-                    # slice(w - r, w) would wrap to the array end and the
-                    # assemble step would left-align the short strip — fail
-                    # loudly instead of silently corrupting the padded plane
-                    raise ValueError(
-                        f"halo margin r={r} exceeds tile dims {w}x{h} "
-                        f"(scene {row.scene_id}, tile "
-                        f"({int(row.tile_x)},{int(row.tile_y)})); retile "
-                        "with tiles at least r pixels on each side")
-                plane = _dec(getattr(row, src_col), w, h)
-                for dx in (-1, 0, 1):
-                    for dy in (-1, 0, 1):
-                        rx, ry = row.tile_x + dx, row.tile_y + dy
-                        if rx < 0 or ry < 0:
-                            continue
-                        center = dx == 0 and dy == 0
-                        if center:
-                            piece, pw, ph = getattr(row, src_col), w, h
-                        else:
-                            xs = slice(None) if dx == 0 else (slice(w - r, w) if dx == 1 else slice(0, r))
-                            ys = slice(None) if dy == 0 else (slice(h - r, h) if dy == 1 else slice(0, r))
-                            p = np.ascontiguousarray(plane[ys, xs], dtype=dtype)
-                            piece, (ph, pw) = p.tobytes(), p.shape
-                        ap["scene_id"](row.scene_id); ap["rx"](rx); ap["ry"](ry)
-                        ap["dx"](dx); ap["dy"](dy)
-                        ap["piece"](piece); ap["pw"](pw); ap["ph"](ph)
-                        ap["image_id"](getattr(row, "image_id", None) if center else None)
-                        ap["w"](w); ap["h"](h)
-            if cols["scene_id"]:
-                yield _batch_from_cols(cols, strip_schema)
-
-    strips = tiles.mapInArrow(emit, strip_schema)
-    parts = strips.repartition(F.col("scene_id"), F.col("rx"), F.col("ry")) \
-                  .sortWithinPartitions("scene_id", "rx", "ry")
-
-    def assemble(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        def flush(acc: list, cols, ap):
-            # a tile key that only received strips (outside the input grid)
-            # has no center piece: it is scene margin, not a tile — drop
-            center = next((s for s in acc if s.dx == 0 and s.dy == 0), None)
-            if center is None:
-                return
-            w, h = int(center.w), int(center.h)
-            pad = np.full((h + 2 * r, w + 2 * r), np.nan, dtype=dtype)
-            for s in acc:
-                x0 = 0 if s.dx == 1 else (r + w if s.dx == -1 else r)
-                y0 = 0 if s.dy == 1 else (r + h if s.dy == -1 else r)
-                pad[y0:y0 + s.ph, x0:x0 + s.pw] = \
-                    np.frombuffer(s.piece, dtype=dtype).reshape(s.ph, s.pw)
-            ap["image_id"](center.image_id)
-            ap["scene_id"](center.scene_id)
-            ap["tile_x"](int(center.rx)); ap["tile_y"](int(center.ry))
-            ap["w"](w); ap["h"](h)
-            ap["pad_bytes"](pad.astype(dtype).tobytes())
-
-        cur_key, acc = None, []
-        cols: dict[str, list] = {f.name: [] for f in HALO_PLANE_SCHEMA}
-        ap = {k: v.append for k, v in cols.items()}
-        for batch in batches:
-            for s in _batch_rows(batch):
-                k = (s.scene_id, s.rx, s.ry)
-                if k != cur_key:
-                    if acc:
-                        flush(acc, cols, ap)
-                        acc = []
-                    cur_key = k
-                acc.append(s)
-                # emit every 64 assembled tiles
-                if len(cols["scene_id"]) >= 64:
-                    yield _batch_from_cols(cols, HALO_PLANE_SCHEMA)
-                    cols = {f.name: [] for f in HALO_PLANE_SCHEMA}
-                    ap = {k2: v.append for k2, v in cols.items()}
-        if acc:
-            flush(acc, cols, ap)
-        if cols["scene_id"]:
-            yield _batch_from_cols(cols, HALO_PLANE_SCHEMA)
-
-    return parts.mapInArrow(assemble, HALO_PLANE_SCHEMA)
 
 
 CONV_SCHEMA = StructType([
@@ -1277,7 +905,7 @@ def convolve_tiles(tiles: DataFrame, weights, divisor: float | None = None,
         for batch in batches:
             cols: dict[str, list] = {f.name: [] for f in CONV_SCHEMA}
             ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
+            for row in batch_rows(batch):
                 w, h = int(row.w), int(row.h)
                 plane = codecs.decode_f32bt(getattr(row, col),
                                             w + 2 * m, h + 2 * m)
@@ -1292,7 +920,7 @@ def convolve_tiles(tiles: DataFrame, weights, divisor: float | None = None,
                 ap["conv_bytes"](p32.tobytes())
                 ap["n_valid"](int(np.isfinite(p32).sum()))
             if cols["image_id"]:
-                yield _batch_from_cols(cols, CONV_SCHEMA)
+                yield batch_from_cols(cols, CONV_SCHEMA)
 
     return src.mapInArrow(fn, CONV_SCHEMA)
 
@@ -1333,7 +961,7 @@ def grow_tiles(tiles: DataFrame, radius: float = 1.01,
         for batch in batches:
             cols: dict[str, list] = {f.name: [] for f in GROW_SCHEMA}
             ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
+            for row in batch_rows(batch):
                 w, h = int(row.w), int(row.h)
                 plane = codecs.decode_f32bt(getattr(row, col),
                                             w + 2 * m, h + 2 * m)
@@ -1350,7 +978,7 @@ def grow_tiles(tiles: DataFrame, radius: float = 1.01,
                 ap["grown_bytes"](p32.tobytes())
                 ap["n_grown"](int((np.isfinite(p32) & ~before).sum()))
             if cols["image_id"]:
-                yield _batch_from_cols(cols, GROW_SCHEMA)
+                yield batch_from_cols(cols, GROW_SCHEMA)
 
     return src.mapInArrow(fn, GROW_SCHEMA)
 
@@ -1384,7 +1012,7 @@ def fillnulls_tiles(tiles: DataFrame, radius: float = 3.0,
         for batch in batches:
             cols: dict[str, list] = {f.name: [] for f in GROW_SCHEMA}
             ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
+            for row in batch_rows(batch):
                 w, h = int(row.w), int(row.h)
                 plane = codecs.decode_f32bt(getattr(row, col),
                                             w + 2 * m, h + 2 * m)
@@ -1403,6 +1031,6 @@ def fillnulls_tiles(tiles: DataFrame, radius: float = 3.0,
                 ap["grown_bytes"](p32.tobytes())
                 ap["n_grown"](int((np.isfinite(p32) & ~before).sum()))
             if cols["image_id"]:
-                yield _batch_from_cols(cols, GROW_SCHEMA)
+                yield batch_from_cols(cols, GROW_SCHEMA)
 
     return src.mapInArrow(fn, GROW_SCHEMA)

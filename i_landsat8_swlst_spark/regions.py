@@ -42,7 +42,7 @@ from pyspark.sql.types import (
 )
 
 from . import codecs
-from .pipeline import _batch_from_cols, _batch_rows
+from .tileops import batch_from_cols, batch_rows
 
 # ONE extraction pass emits both row kinds (kind 0 = local region with
 # partial stats; kind 1 = masked border cell; kind 2 = across-border probe)
@@ -131,7 +131,7 @@ def _extract_pass(tiles: DataFrame, threshold: float, src_col: str,
                 ap["gx1"](int(gx1)); ap["gy1"](int(gy1))
                 ap["gx"](int(gx)); ap["gy"](int(gy))
 
-            for row in _batch_rows(batch):
+            for row in batch_rows(batch):
                 w, h = int(row.w), int(row.h)
                 tx, ty = int(row.tile_x), int(row.tile_y)
                 plane = codecs.decode_f32bt(getattr(row, src_col), w, h).astype(np.float64)
@@ -181,7 +181,7 @@ def _extract_pass(tiles: DataFrame, threshold: float, src_col: str,
                         emit(row.scene_id, 1, nd, gx=gx, gy=gy)
                         emit(row.scene_id, 2, nd, gx=gx + dx, gy=gy + dy)
             if cols["scene_id"]:
-                yield _batch_from_cols(cols, EXTRACT_SCHEMA)
+                yield batch_from_cols(cols, EXTRACT_SCHEMA)
 
     return tiles.mapInArrow(fn, EXTRACT_SCHEMA)
 
@@ -353,7 +353,7 @@ def _lake_pass(tiles: DataFrame, level: float, src_col: str,
                 ap["w"](int(w)); ap["h"](int(h))
                 ap["label_bytes"](lb); ap["depth_bytes"](db)
 
-            for row in _batch_rows(batch):
+            for row in batch_rows(batch):
                 w, h = int(row.w), int(row.h)
                 tx, ty = int(row.tile_x), int(row.tile_y)
                 plane = codecs.decode_f32bt(getattr(row, src_col), w, h) \
@@ -386,7 +386,7 @@ def _lake_pass(tiles: DataFrame, level: float, src_col: str,
                         emit(row.scene_id, 1, nd, gx=gx, gy=gy)
                         emit(row.scene_id, 2, nd, gx=gx + dx, gy=gy + dy)
             if cols["scene_id"]:
-                yield _batch_from_cols(cols, _LAKE_PASS_SCHEMA)
+                yield batch_from_cols(cols, _LAKE_PASS_SCHEMA)
 
     return tiles.mapInArrow(fn, _LAKE_PASS_SCHEMA)
 
@@ -449,7 +449,7 @@ def lake_tiles(tiles: DataFrame, seeds: DataFrame, level: float,
         def seed_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
             for batch in batches:
                 cols: dict[str, list] = {"scene_id": [], "v": []}
-                for row in _batch_rows(batch):
+                for row in batch_rows(batch):
                     labels = np.frombuffer(row.label_bytes, "<i4").reshape(
                         int(row.h), int(row.w))
                     lv = int(labels[int(row.py), int(row.px)])
@@ -463,7 +463,7 @@ def lake_tiles(tiles: DataFrame, seeds: DataFrame, level: float,
                         int(row.tile_x), int(row.tile_y),
                         np.array([lv]))[0]))
                 if cols["scene_id"]:
-                    yield _batch_from_cols(cols, _SEED_NODE_SCHEMA)
+                    yield batch_from_cols(cols, _SEED_NODE_SCHEMA)
 
         seed_nodes = sj.mapInArrow(seed_fn, _SEED_NODE_SCHEMA)
         n_matched = seed_nodes.count()

@@ -43,7 +43,7 @@ from pyspark.sql.types import (
 )
 
 from . import codecs
-from .pipeline import _batch_from_cols, _batch_rows
+from .tileops import batch_from_cols, batch_rows
 from .regions import _cc_min_label, _pack_node
 
 
@@ -140,7 +140,7 @@ def _seg_extract(tiles: DataFrame, lam: float, src_col: str,
                 ap["gx1"](int(gx1)); ap["gy1"](int(gy1))
                 ap["gx"](int(gx)); ap["gy"](int(gy)); ap["val"](float(val))
 
-            for row in _batch_rows(batch):
+            for row in batch_rows(batch):
                 w, h = int(row.w), int(row.h)
                 tx, ty = int(row.tile_x), int(row.tile_y)
                 plane = codecs.decode_f32bt(getattr(row, src_col), w, h)
@@ -190,7 +190,7 @@ def _seg_extract(tiles: DataFrame, lam: float, src_col: str,
                         emit(row.scene_id, 2, nd, gx=gx + dx, gy=gy + dy,
                              val=v)
             if cols["scene_id"]:
-                yield _batch_from_cols(cols, _SEG_SCHEMA)
+                yield batch_from_cols(cols, _SEG_SCHEMA)
 
     # mapInArrow cannot column-prune: select only what the kernel reads
     src = tiles.select("scene_id", "tile_x", "tile_y", "w", "h", src_col)

@@ -48,7 +48,7 @@ from pyspark.sql.types import (
 
 from . import codecs
 from .multiband import scene_ranges_df
-from .pipeline import _batch_from_cols, _batch_rows
+from .tileops import batch_from_cols, batch_rows
 from .texture import _quantize
 
 SERIES_STATS = ("count", "mean", "stddev", "min", "max", "median")
@@ -239,7 +239,7 @@ def series_tiles_deep(tiles: DataFrame, src_col: str = "lst_bytes",
         for batch in batches:
             cols: dict[str, list] = {f.name: [] for f in _DEEP_RANGE_PART}
             ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
+            for row in batch_rows(batch):
                 x = codecs.decode_f32bt(getattr(row, src_col),
                                         int(row.w), int(row.h))
                 x = x[np.isfinite(x)]
@@ -248,7 +248,7 @@ def series_tiles_deep(tiles: DataFrame, src_col: str = "lst_bytes",
                     ap["tile_x"](row.tile_x); ap["tile_y"](row.tile_y)
                     ap["vmin"](float(x.min())); ap["vmax"](float(x.max()))
             if cols["footprint"]:
-                yield _batch_from_cols(cols, _DEEP_RANGE_PART)
+                yield batch_from_cols(cols, _DEEP_RANGE_PART)
 
     rngs = (keyed.mapInArrow(range_fn, _DEEP_RANGE_PART)
             .groupBy(*key)
@@ -300,7 +300,7 @@ def series_tiles_deep(tiles: DataFrame, src_col: str = "lst_bytes",
         cols: dict[str, list] = {f.name: [] for f in schema}
         ap = {k: v.append for k, v in cols.items()}
         for batch in batches:
-            for row in _batch_rows(batch):
+            for row in batch_rows(batch):
                 kk = (row.footprint, int(row.tile_x), int(row.tile_y))
                 w, h = int(row.w), int(row.h)
                 if state and state["key"] != kk:
@@ -338,7 +338,7 @@ def series_tiles_deep(tiles: DataFrame, src_col: str = "lst_bytes",
         if state:
             flush(cols, ap)
         if cols["footprint"]:
-            yield _batch_from_cols(cols, schema)
+            yield batch_from_cols(cols, schema)
 
     # left join: an all-NaN group has no range row but still reports its
     # zero counts. Join BEFORE the repartition so the in-partition sort is
@@ -509,7 +509,7 @@ def crosstab_tiles(tiles: DataFrame, col_a: str = "lst_bytes",
         for batch in batches:
             cols: dict[str, list] = {f.name: [] for f in _CROSSTAB_PART}
             ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
+            for row in batch_rows(batch):
                 w, h = int(row.w), int(row.h)
                 a = codecs.decode_f32bt(getattr(row, col_a), w, h)
                 b = codecs.decode_f32bt(getattr(row, col_b), w, h)
@@ -529,7 +529,7 @@ def crosstab_tiles(tiles: DataFrame, col_a: str = "lst_bytes",
                     ap["class_b"](int(k % (levels_b + 1)) - 1)
                     ap["n_px"](int(cnt[k]))
             if cols["scene_id"]:
-                yield _batch_from_cols(cols, _CROSSTAB_PART)
+                yield batch_from_cols(cols, _CROSSTAB_PART)
 
     # mapInArrow cannot column-prune: select only what the kernel reads so
     # unrelated plane columns never serialize through Arrow
@@ -594,7 +594,7 @@ def anomaly_tiles(history: DataFrame, current: DataFrame, k: float = 3.0,
         for batch in batches:
             cols: dict[str, list] = {f.name: [] for f in _ANOM_SCHEMA}
             ap = {kk: v.append for kk, v in cols.items()}
-            for row in _batch_rows(batch):
+            for row in batch_rows(batch):
                 w, h = int(row.w), int(row.h)
                 c = codecs.decode_f32bt(row.cur_bytes, w, h)
                 n = codecs.decode_f32bt(row.count_bytes, w, h)
@@ -619,7 +619,7 @@ def anomaly_tiles(history: DataFrame, current: DataFrame, k: float = 3.0,
                 ap["max_abs_z"](float(np.abs(z[fin]).max()) if fin.any()
                                 else None)
             if cols["footprint"]:
-                yield _batch_from_cols(cols, _ANOM_SCHEMA)
+                yield batch_from_cols(cols, _ANOM_SCHEMA)
 
     return joined.mapInArrow(fn, _ANOM_SCHEMA)
 
@@ -766,7 +766,7 @@ def regression_tiles(tiles: DataFrame, col_x: str = "cwv_bytes",
         for batch in batches:
             cols: dict[str, list] = {f.name: [] for f in _REGR_PART}
             ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
+            for row in batch_rows(batch):
                 w, h = int(row.w), int(row.h)
                 x = codecs.decode_f32bt(getattr(row, col_x), w, h)
                 y = codecs.decode_f32bt(getattr(row, col_y), w, h)
@@ -781,7 +781,7 @@ def regression_tiles(tiles: DataFrame, col_x: str = "cwv_bytes",
                 ap["syy"](float((yv * yv).sum()))
                 ap["sxy"](float((xv * yv).sum()))
             if cols["scene_id"]:
-                yield _batch_from_cols(cols, _REGR_PART)
+                yield batch_from_cols(cols, _REGR_PART)
 
     agg = (src.mapInArrow(fn, _REGR_PART)
            .groupBy("scene_id")

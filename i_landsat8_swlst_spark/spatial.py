@@ -40,7 +40,7 @@ from pyspark.sql.types import (
 )
 
 from . import geo
-from .pipeline import _batch_from_cols, _batch_rows, _coalesce_batches
+from .tileops import batch_from_cols, batch_rows, coalesce_batches
 
 # --------------------------------------------------------------------------
 # batched cell-encode (vectorized pandas UDFs)
@@ -907,7 +907,7 @@ def enrich_pixels(points: DataFrame, aoi: pd.DataFrame, stations: pd.DataFrame,
         m = len(ids)
         kk = min(k, m)
         id_rank = np.argsort(np.argsort(ids, kind="stable"))
-        for batch in _coalesce_batches(batches):
+        for batch in coalesce_batches(batches):
             n = batch.num_rows
             if n == 0:
                 continue
@@ -1332,7 +1332,7 @@ def idw_rasterize(tiles: DataFrame, stations: pd.DataFrame,
         for batch in batches:
             cols: dict[str, list] = {f.name: [] for f in _IDW_SCHEMA}
             ap = {kk: v.append for kk, v in cols.items()}
-            for row in _batch_rows(batch):
+            for row in batch_rows(batch):
                 w, h = int(row.w), int(row.h)
                 dlon = (row.lon1 - row.lon0) / row.ntx
                 dlat = (row.lat1 - row.lat0) / row.nty
@@ -1347,7 +1347,7 @@ def idw_rasterize(tiles: DataFrame, stations: pd.DataFrame,
                 ap["idw_bytes"](p32.tobytes())
                 ap["n_interp"](int(np.isfinite(p32).sum()))
             if cols["scene_id"]:
-                yield _batch_from_cols(cols, _IDW_SCHEMA)
+                yield batch_from_cols(cols, _IDW_SCHEMA)
 
     return src.mapInArrow(fn, _IDW_SCHEMA)
 
@@ -1571,7 +1571,7 @@ def kde_rasterize(tiles: DataFrame, stations: pd.DataFrame,
         for batch in batches:
             cols: dict[str, list] = {f.name: [] for f in schema}
             ap = {kk: v.append for kk, v in cols.items()}
-            for row in _batch_rows(batch):
+            for row in batch_rows(batch):
                 w, h = int(row.w), int(row.h)
                 dlon = (row.lon1 - row.lon0) / row.ntx
                 dlat = (row.lat1 - row.lat0) / row.nty
@@ -1586,7 +1586,7 @@ def kde_rasterize(tiles: DataFrame, stations: pd.DataFrame,
                 ap["kde_bytes"](p32.tobytes())
                 ap["n_interp"](int(np.isfinite(p32).sum()))
             if cols["scene_id"]:
-                yield _batch_from_cols(cols, schema)
+                yield batch_from_cols(cols, schema)
 
     return src.mapInArrow(fn, schema)
 
@@ -1730,7 +1730,7 @@ def rasterize_lines(tiles: DataFrame, lines: pd.DataFrame,
         for batch in batches:
             cols: dict[str, list] = {f.name: [] for f in _LINES_SCHEMA}
             ap = {kk: v.append for kk, v in cols.items()}
-            for row in _batch_rows(batch):
+            for row in batch_rows(batch):
                 w, h = int(row.w), int(row.h)
                 plane = _burn_lines_plane(
                     w, h, int(row.tile_x), int(row.tile_y),
@@ -1745,7 +1745,7 @@ def rasterize_lines(tiles: DataFrame, lines: pd.DataFrame,
                 ap["line_bytes"](plane.tobytes())
                 ap["n_cells"](n)
             if cols["scene_id"]:
-                yield _batch_from_cols(cols, _LINES_SCHEMA)
+                yield batch_from_cols(cols, _LINES_SCHEMA)
 
     return src.mapInArrow(fn, _LINES_SCHEMA)
 
@@ -1910,7 +1910,7 @@ def sample_random_cells(tiles: DataFrame, n: int, seed: int = 0,
         for batch in batches:
             cols: dict[str, list] = {f.name: [] for f in _RANDOM_CELLS_SCHEMA}
             ap = {kk: v.append for kk, v in cols.items()}
-            for row in _batch_rows(batch):
+            for row in batch_rows(batch):
                 w, h = int(row.w), int(row.h)
                 plane = np.frombuffer(getattr(row, src_col), "<f4") \
                     .reshape(h, w).astype(np.float64)
@@ -1928,7 +1928,7 @@ def sample_random_cells(tiles: DataFrame, n: int, seed: int = 0,
                     ap["value"](float(plane[py[i], px[i]]))
                     ap["rank_h"](int(rk[i]))
             if cols["scene_id"]:
-                yield _batch_from_cols(cols, _RANDOM_CELLS_SCHEMA)
+                yield batch_from_cols(cols, _RANDOM_CELLS_SCHEMA)
 
     cand = src.mapInArrow(fn, _RANDOM_CELLS_SCHEMA)
     w = Window.partitionBy("scene_id").orderBy("rank_h", "gx", "gy")

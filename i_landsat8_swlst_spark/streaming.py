@@ -34,7 +34,8 @@ from pyspark.sql.types import (
 )
 
 from . import codecs
-from .pipeline import _to_batch, parse_scenes
+from .pipeline import parse_scenes
+from .tileops import to_batch
 
 SCENES_SCHEMA = StructType([
     StructField("image_id", StringType()),
@@ -90,7 +91,7 @@ def _decode_stats(df: DataFrame) -> DataFrame:
                     "dn_mean": round(float(img.mean()), 6),
                 })
             if out:
-                yield _to_batch(pd.DataFrame(out), TILE_STATS_SCHEMA)
+                yield to_batch(pd.DataFrame(out), TILE_STATS_SCHEMA)
 
     return df.mapInArrow(fn, TILE_STATS_SCHEMA)
 

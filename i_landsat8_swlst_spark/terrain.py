@@ -66,7 +66,7 @@ from pyspark.sql.types import (
 )
 
 from . import codecs
-from .pipeline import _batch_from_cols, _batch_rows
+from .tileops import batch_from_cols, batch_rows, halo_plane_tiles
 
 _CELL_SCHEMA = StructType([
     StructField("scene_id", StringType()),
@@ -276,7 +276,7 @@ def _sector_pass(tiles: DataFrame, obs: DataFrame, n_sectors: int,
         for batch in batches:
             cols: dict[str, list] = {f.name: [] for f in _CELL_SCHEMA}
             ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
+            for row in batch_rows(batch):
                 if row.ox is None:
                     continue                  # scene without an observer
                 w, h = int(row.w), int(row.h)
@@ -349,7 +349,7 @@ def _sector_pass(tiles: DataFrame, obs: DataFrame, n_sectors: int,
                     ap["gx0"](int(x2[rstarts[i]]))
                     ap["z_bytes"](z2[rstarts[i]:rends[i]].tobytes())
             if cols["scene_id"]:
-                yield _batch_from_cols(cols, _CELL_SCHEMA)
+                yield batch_from_cols(cols, _CELL_SCHEMA)
 
     src = tiles.select("scene_id", "tile_x", "tile_y", "w", "h", src_col) \
         .join(F.broadcast(obs), on="scene_id", how="left")
@@ -370,7 +370,7 @@ def _observer_terrain(tiles: DataFrame, obs_df: DataFrame, nom_w: int,
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             cols: dict[str, list] = {"scene_id": [], "z": []}
-            for row in _batch_rows(batch):
+            for row in batch_rows(batch):
                 w, h = int(row.w), int(row.h)
                 lx = int(row.ox) - int(row.tile_x) * nom_w
                 ly = int(row.oy) - int(row.tile_y) * nom_h
@@ -380,7 +380,7 @@ def _observer_terrain(tiles: DataFrame, obs_df: DataFrame, nom_w: int,
                 cols["scene_id"].append(row.scene_id)
                 cols["z"].append(float(plane[ly, lx]))
             if cols["scene_id"]:
-                yield _batch_from_cols(cols, _EYE_SCHEMA)
+                yield batch_from_cols(cols, _EYE_SCHEMA)
 
     return hit.mapInArrow(fn, _EYE_SCHEMA)
 
@@ -526,7 +526,7 @@ def viewshed_tiles(tiles: DataFrame, observers, obs_height: float = 1.75,
         for batch in batches:
             cols: dict[str, list] = {f.name: [] for f in VIEWSHED_SCHEMA}
             ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
+            for row in batch_rows(batch):
                 w, h = int(row.w), int(row.h)
                 plane = np.full((h, w), 255, dtype=np.uint8)
                 if row.ev_masks is not None and len(row.ev_masks):
@@ -550,7 +550,7 @@ def viewshed_tiles(tiles: DataFrame, observers, obs_height: float = 1.75,
                 ap["n_visible"](int((plane == 1).sum()))
                 ap["n_evaluated"](int((plane != 255).sum()))
             if cols["scene_id"]:
-                yield _batch_from_cols(cols, VIEWSHED_SCHEMA)
+                yield batch_from_cols(cols, VIEWSHED_SCHEMA)
 
     return joined.mapInArrow(build, VIEWSHED_SCHEMA)
 
@@ -716,7 +716,7 @@ def sun_tiles(tiles: DataFrame, sun: DataFrame | pd.DataFrame,
         for batch in batches:
             cols: dict[str, list] = {f.name: [] for f in _SUN_SEG_SCHEMA}
             ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
+            for row in batch_rows(batch):
                 pos = sun_b.value.get(row.scene_id)
                 if pos is None:
                     continue
@@ -762,7 +762,7 @@ def sun_tiles(tiles: DataFrame, sun: DataFrame | pd.DataFrame,
                     ap["z_bytes"](
                         zflat[starts[i]:ends[i]].astype("<f4").tobytes())
             if cols["scene_id"]:
-                yield _batch_from_cols(cols, _SUN_SEG_SCHEMA)
+                yield batch_from_cols(cols, _SUN_SEG_SCHEMA)
 
     segs = tiles.select("scene_id", "tile_x", "tile_y", "w", "h", src_col) \
         .mapInArrow(emit_segments, _SUN_SEG_SCHEMA)
@@ -848,7 +848,6 @@ def sun_tiles(tiles: DataFrame, sun: DataFrame | pd.DataFrame,
     shadows = segs.groupBy("scene_id", "bkt").applyInPandas(
         lambda key, pdf: scan_bucket(pdf), _SHADOW_SCHEMA)
 
-    from .pipeline import halo_plane_tiles
     src = tiles
     if "image_id" not in tiles.columns:
         src = tiles.withColumn("image_id", F.lit(""))
@@ -871,7 +870,7 @@ def sun_tiles(tiles: DataFrame, sun: DataFrame | pd.DataFrame,
         for batch in batches:
             cols: dict[str, list] = {f.name: [] for f in SUN_SCHEMA}
             ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
+            for row in batch_rows(batch):
                 pos = sun_b.value.get(row.scene_id)
                 w, h = int(row.w), int(row.h)
                 ap["scene_id"](row.scene_id)
@@ -914,7 +913,7 @@ def sun_tiles(tiles: DataFrame, sun: DataFrame | pd.DataFrame,
                 ap["n_shaded"](int((~lit & valid).sum()))
                 ap["n_valid"](int(valid.sum()))
             if cols["scene_id"]:
-                yield _batch_from_cols(cols, SUN_SCHEMA)
+                yield batch_from_cols(cols, SUN_SCHEMA)
 
     return joined.mapInArrow(build, SUN_SCHEMA)
 
@@ -999,7 +998,7 @@ def viewshed_count_tiles(tiles: DataFrame, observers,
         for batch in batches:
             cols: dict[str, list] = {f.name: [] for f in _MCELL_SCHEMA}
             ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
+            for row in batch_rows(batch):
                 olist = obs_b.value.get(row.scene_id)
                 if not olist:
                     continue
@@ -1064,7 +1063,7 @@ def viewshed_count_tiles(tiles: DataFrame, observers,
                         ap["gx0"](int(x2[rstarts[i]]))
                         ap["z_bytes"](z2[rstarts[i]:rends[i]].tobytes())
             if cols["scene_id"]:
-                yield _batch_from_cols(cols, _MCELL_SCHEMA)
+                yield batch_from_cols(cols, _MCELL_SCHEMA)
 
     cells = tiles.select("scene_id", "tile_x", "tile_y", "w", "h", src_col) \
         .mapInArrow(emit, _MCELL_SCHEMA)
@@ -1088,7 +1087,7 @@ def viewshed_count_tiles(tiles: DataFrame, observers,
             -> Iterator[pa.RecordBatch]:
         for batch in batches:
             cols: dict[str, list] = {"scene_id": [], "obs_id": [], "z": []}
-            for row in _batch_rows(batch):
+            for row in batch_rows(batch):
                 w, h = int(row.w), int(row.h)
                 lx = int(row.ox) - int(row.tile_x) * nom_w
                 ly = int(row.oy) - int(row.tile_y) * nom_h
@@ -1099,7 +1098,7 @@ def viewshed_count_tiles(tiles: DataFrame, observers,
                 cols["obs_id"].append(row.obs_id)
                 cols["z"].append(float(plane[ly, lx]))
             if cols["scene_id"]:
-                yield _batch_from_cols(cols, eye_schema)
+                yield batch_from_cols(cols, eye_schema)
 
     oz = hit.mapInArrow(eye_fn, eye_schema).toPandas()
     eyes = {}
@@ -1196,7 +1195,7 @@ def viewshed_count_tiles(tiles: DataFrame, observers,
             cols: dict[str, list] = {f.name: []
                                      for f in VIEWSHED_COUNT_SCHEMA}
             ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
+            for row in batch_rows(batch):
                 w, h = int(row.w), int(row.h)
                 plane = codecs.decode_f32bt(getattr(row, src_col), w, h)
                 cnt = np.where(np.isfinite(plane), 0.0, np.nan) \
@@ -1219,7 +1218,7 @@ def viewshed_count_tiles(tiles: DataFrame, observers,
                 ap["n_covered"](int((cnt > 0).sum()))
                 ap["n_evaluated"](int(valid.sum()))
             if cols["scene_id"]:
-                yield _batch_from_cols(cols, VIEWSHED_COUNT_SCHEMA)
+                yield batch_from_cols(cols, VIEWSHED_COUNT_SCHEMA)
 
     return joined.mapInArrow(build, VIEWSHED_COUNT_SCHEMA)
 
@@ -1346,7 +1345,7 @@ def horizon_tiles(tiles: DataFrame, azimuths, src_col: str = "lst_bytes"
         for batch in batches:
             cols: dict[str, list] = {f.name: [] for f in _HCELL_SCHEMA}
             ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
+            for row in batch_rows(batch):
                 w, h = int(row.w), int(row.h)
                 tx0, ty0 = int(row.tile_x) * nom_w, int(row.tile_y) * nom_h
                 plane = codecs.decode_f32bt(
@@ -1381,7 +1380,7 @@ def horizon_tiles(tiles: DataFrame, azimuths, src_col: str = "lst_bytes"
                         ap["gx0"](int(gx[rstarts[i]]))
                         ap["z_bytes"](z[rstarts[i]:rends[i]].tobytes())
             if cols["scene_id"]:
-                yield _batch_from_cols(cols, _HCELL_SCHEMA)
+                yield batch_from_cols(cols, _HCELL_SCHEMA)
 
     cells = tiles.select("scene_id", "tile_x", "tile_y", "w", "h", src_col) \
         .mapInArrow(emit, _HCELL_SCHEMA)
@@ -1458,7 +1457,7 @@ def horizon_tiles(tiles: DataFrame, azimuths, src_col: str = "lst_bytes"
         for batch in batches:
             cols: dict[str, list] = {f.name: [] for f in HORIZON_SCHEMA}
             ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
+            for row in batch_rows(batch):
                 w, h = int(row.w), int(row.h)
                 plane = np.full((nom_h, nom_w), np.nan, dtype=np.float32)
                 if row.idx_l is not None and len(row.idx_l):
@@ -1474,6 +1473,6 @@ def horizon_tiles(tiles: DataFrame, azimuths, src_col: str = "lst_bytes"
                 ap["horizon_bytes"](np.ascontiguousarray(plane).tobytes())
                 ap["n_valid"](int(np.isfinite(plane).sum()))
             if cols["scene_id"]:
-                yield _batch_from_cols(cols, HORIZON_SCHEMA)
+                yield batch_from_cols(cols, HORIZON_SCHEMA)
 
     return joined.mapInArrow(build, HORIZON_SCHEMA)

@@ -20,6 +20,7 @@ import pandas as pd  # module-level: pandas_udf type-hint strings (PEP 563)
 from pyspark.sql import Window, functions as F
 
 from .relational import _REGISTRY, load, register
+from .tileops import batch_from_cols, coalesce_batches
 
 # --------------------------------------------------------------------------
 # exact dedup: md5 grouping, keep min doc_id (hash-groupBy dedup)
@@ -141,8 +142,6 @@ def _minh_wide(spark, sf_dir):
     import numpy as np
     import pyarrow as pa
 
-    from .pipeline import _coalesce_batches
-
     d = _spread(load(spark, sf_dir, "documents").filter(_SUBSET), "doc_id")
     ab = [_perm_ab(i) for i in range(_NPERM)]
     a_np = np.array([a for a, _ in ab], dtype=np.int64)[:, None]
@@ -152,7 +151,7 @@ def _minh_wide(spark, sf_dir):
 
     def sigs(batches):
         md5 = hashlib.md5
-        for batch in _coalesce_batches(batches, 1024):
+        for batch in coalesce_batches(batches, 1024):
             doc_ids = batch.column(0).to_pylist()
             texts = batch.column(1).to_pylist()
             out_ids = []
@@ -388,8 +387,6 @@ def _shingle_sets(docs, k: int):
     sh_schema = StructType([id_field, StructField("sh", StringType())])
 
     def shingles(batches):
-        import pyarrow as pa
-
         for batch in batches:
             ids = batch.column(0).to_pylist()
             texts = batch.column(1).to_pylist()
@@ -405,13 +402,8 @@ def _shingle_sets(docs, k: int):
                 ids_out.extend([did] * len(seen))
                 sh_out.extend(seen)
             if ids_out:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(ids_out,
-                              pa.int64()
-                              if id_field.dataType.simpleString() == "bigint"
-                              else None),
-                     pa.array(sh_out, pa.string())],
-                    names=["doc_id", "sh"])
+                yield batch_from_cols({"doc_id": ids_out, "sh": sh_out},
+                                      sh_schema)
 
     return docs.select("doc_id", "text").mapInArrow(shingles, sh_schema)
 
@@ -592,8 +584,8 @@ def q_char_entropy(spark, sf_dir):
     # substr(text, i, 1), counts are exact integers, and the partial sum
     # folds SEQUENTIALLY over the ch-sorted count list — python sorted()
     # orders strings by code point == the engines' binary UTF-8 ORDER BY,
-    # and python's libm ln/multiply/add are the identical IEEE doubles of
-    # the documented cross-engine fold. Empty docs emit no row (the old
+    # and the python libm ln/multiply/add fold agrees with the documented
+    # cross-engine fold after round(6); the DuckDB gate is the authority. Empty docs emit no row (the old
     # length > 0 guard); the entropy expression and its HALF_UP round
     # stay in the JVM, unchanged.
     from collections import Counter
@@ -612,8 +604,6 @@ def q_char_entropy(spark, sf_dir):
     ])
 
     def fold(batches):
-        import pyarrow as pa
-
         for batch in batches:
             ids = batch.column(0).to_pylist()
             texts = batch.column(1).to_pylist()
@@ -632,15 +622,7 @@ def q_char_entropy(spark, sf_dir):
                 out["alphabet"].append(len(cnt))
                 out["s"].append(s)
             if out["doc_id"]:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(out["doc_id"],
-                              pa.int64()
-                              if id_field.dataType.simpleString() == "bigint"
-                              else None),
-                     pa.array(out["n_chars"], pa.int64()),
-                     pa.array(out["alphabet"], pa.int64()),
-                     pa.array(out["s"], pa.float64())],
-                    names=[f.name for f in out_schema.fields])
+                yield batch_from_cols(out, out_schema)
 
     folded = d.select("doc_id", "text").mapInArrow(fold, out_schema)
     ent = (F.log(F.col("n_chars").cast("double")) - F.col("s") / F.col("n_chars")) / F.log(F.lit(2.0))
@@ -945,7 +927,6 @@ def q_winnow_fingerprint(spark, sf_dir):
 
     def fp(batches):
         import numpy as np
-        import pyarrow as pa
 
         win = np.lib.stride_tricks.sliding_window_view
         for batch in batches:
@@ -981,16 +962,7 @@ def q_winnow_fingerprint(spark, sf_dir):
                 out["min_fp"].append(int(mins.min()))
                 out["max_fp"].append(int(mins.max()))
             if out["doc_id"]:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(out["doc_id"],
-                              pa.int64()
-                              if id_field.dataType.simpleString() == "bigint"
-                              else None),
-                     pa.array(out["n_kgrams"], pa.int64()),
-                     pa.array(out["n_fingerprints"], pa.int64()),
-                     pa.array(out["min_fp"], pa.int64()),
-                     pa.array(out["max_fp"], pa.int64())],
-                    names=[f.name for f in out_schema.fields])
+                yield batch_from_cols(out, out_schema)
 
     return d.select("doc_id", "text").mapInArrow(fp, out_schema)
 
@@ -1222,8 +1194,6 @@ def q_ann_ivf(spark, sf_dir):
     import numpy as np
     import pyarrow as pa
 
-    from .pipeline import _coalesce_batches
-
     # norms precomputed per VECTOR, not per joined pair (bit-identical value,
     # |V|+|C| folds instead of |V|*|C|); repartition("vec_id") spreads the
     # single-row-group scan AND pre-establishes the partitioning every
@@ -1249,7 +1219,7 @@ def q_ann_ivf(spark, sf_dir):
         for d in range(ndim):          # exact fold: 0D + q1*q1 + q2*q2 ...
             cn += cm[:, d] * cm[:, d]
         cnrm = np.sqrt(cn)
-        for batch in _coalesce_batches(batches, 2048):
+        for batch in coalesce_batches(batches, 2048):
             vid = batch.column(0).to_numpy(zero_copy_only=False) \
                 .astype(np.int64)
             flat = batch.column(1).flatten().to_numpy(zero_copy_only=False)

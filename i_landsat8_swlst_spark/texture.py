@@ -6,7 +6,7 @@ moving window, distributed with EXACT whole-scene semantics:
 1. **Global quantization** — gray levels come from the per-scene finite
    (min, max) (`multiband.scene_ranges`, one scan + one tiny agg), so every
    tile quantizes identically; NaN cells map to level -1 and never pair.
-2. **Halo exchange** — one `pipeline.halo_plane_tiles` round with margin
+2. **Halo exchange** — one `tileops.halo_plane_tiles` round with margin
    r = window//2 + max(|dx|,|dy|), so each tile sees every neighbor pixel
    any of its windows can pair with: tile-local results are bit-identical
    to running the kernel on the mosaicked scene (the brute oracle in
@@ -55,7 +55,7 @@ from pyspark.sql.types import (
 
 from . import codecs
 from .multiband import _bin_plane, scene_ranges_df
-from .pipeline import _batch_from_cols, _batch_rows, halo_plane_tiles
+from .tileops import batch_from_cols, batch_rows, halo_plane_tiles
 
 FEATURES = ("contrast", "dissimilarity", "homogeneity", "energy", "entropy")
 
@@ -223,7 +223,7 @@ def glcm_texture_tiles(tiles: DataFrame, src_col: str = "lst_bytes",
         for batch in batches:
             cols: dict[str, list] = {f.name: [] for f in schema}
             ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
+            for row in batch_rows(batch):
                 w, h = int(row.w), int(row.h)
                 pad = codecs.decode_f32bt(row.pad_bytes, w + 2 * r, h + 2 * r)
                 # a scene with zero finite pixels has no range row (NULL
@@ -256,7 +256,7 @@ def glcm_texture_tiles(tiles: DataFrame, src_col: str = "lst_bytes",
                     ap[f"{f}_mean"](
                         float(np.nanmean(plane)) if any_ok else None)
             if cols["scene_id"]:
-                yield _batch_from_cols(cols, schema)
+                yield batch_from_cols(cols, schema)
 
     src = (halo_plane_tiles(tiles, r=r, src_col=src_col)
            .join(F.broadcast(ranges_df), on="scene_id", how="left"))

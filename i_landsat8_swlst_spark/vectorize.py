@@ -36,7 +36,7 @@ VERDICT asked for; a 10^9-px region's boundary is typically ~10^5 edges.
 **contour_lines** (r.contour): marching squares on the pixel-CENTER grid.
 Each tile computes the cells whose top-left pixel it owns, reading right/
 bottom neighbors from the engine's generic 1-px halo exchange
-(pipeline.halo_plane_tiles) — every cell is computed exactly once scene-
+(tileops.halo_plane_tiles) — every cell is computed exactly once scene-
 wide, and a shared cell edge gets BIT-IDENTICAL crossing coordinates on
 both sides of a tile border (the interpolation reads the same two f32
 values), so chains stitch exactly. Isolines come back as ordered
@@ -64,7 +64,7 @@ from pyspark.sql.types import (
 )
 
 from . import codecs
-from .pipeline import _batch_from_cols, _batch_rows, halo_plane_tiles
+from .tileops import batch_from_cols, batch_rows, halo_plane_tiles
 from .regions import _cc_min_label, _pack_node, label_tile
 
 # one pass emits every row kind so each tile is decoded and labeled once:
@@ -128,7 +128,7 @@ def _tovect_pass(tiles: DataFrame, threshold: float, src_col: str,
                     emit(scene, kind, nodes[i], gxs[i], gys[i],
                          xy[0][i], xy[1][i], xy[2][i], xy[3][i])
 
-            for row in _batch_rows(batch):
+            for row in batch_rows(batch):
                 w, h = int(row.w), int(row.h)
                 tx, ty = int(row.tile_x), int(row.tile_y)
                 plane = codecs.decode_f32bt(
@@ -206,7 +206,7 @@ def _tovect_pass(tiles: DataFrame, threshold: float, src_col: str,
                                    side, pend=True,
                                    pgx=ox + xs_ + dx, pgy=oy + ys_ + dy)
             if cols["scene_id"]:
-                yield _batch_from_cols(cols, _TOVECT_PASS_SCHEMA)
+                yield batch_from_cols(cols, _TOVECT_PASS_SCHEMA)
 
     return tiles.mapInArrow(fn, _TOVECT_PASS_SCHEMA)
 
@@ -459,7 +459,7 @@ def _contour_pass(padded: DataFrame, levels: Sequence[float],
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             acc: dict[str, list] = {f.name: [] for f in _SEG_SCHEMA}
-            for row in _batch_rows(batch):
+            for row in batch_rows(batch):
                 w, h = int(row.w), int(row.h)
                 tx, ty = int(row.tile_x), int(row.tile_y)
                 pad = np.frombuffer(row.pad_bytes, dtype="<f4") \

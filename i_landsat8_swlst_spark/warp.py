@@ -70,7 +70,7 @@ from pyspark.sql.types import (
 )
 
 from . import codecs
-from .pipeline import _batch_from_cols, _batch_rows
+from .tileops import batch_from_cols, batch_rows, spread_tiles
 
 
 @dataclass(frozen=True)
@@ -309,15 +309,13 @@ def warp_tiles(tiles: DataFrame, src_geom: DataFrame, dst: GridSpec,
     if need is None:
         raise ValueError(f"method must be one of {sorted(_METHOD_CORNERS)}, got {method!r}")
 
-    from .pipeline import spread_tiles
-
     src = _src_with_geom(spread_tiles(tiles), src_geom, src_col)
 
     def emit(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             cols: dict[str, list] = {f.name: [] for f in FRAGMENT_SCHEMA}
             ap = {k: v.append for k, v in cols.items()}
-            for row in _batch_rows(batch):
+            for row in batch_rows(batch):
                 w, h = int(row.w), int(row.h)
                 if not (row.w_min == row.w_max and row.h_min == row.h_max):
                     raise ValueError(
@@ -343,7 +341,7 @@ def warp_tiles(tiles: DataFrame, src_geom: DataFrame, dst: GridSpec,
                     ap["cnt_bytes"](cnt.tobytes())
                     ap["fin_bytes"](fin.tobytes())
             if cols["scene_id"]:
-                yield _batch_from_cols(cols, FRAGMENT_SCHEMA)
+                yield batch_from_cols(cols, FRAGMENT_SCHEMA)
 
     frags = src.mapInArrow(emit, FRAGMENT_SCHEMA)
     d_tw, d_th = dst.tile_w, dst.tile_h

@@ -166,9 +166,34 @@ def test_halo_bt_input_matches_mosaic_oracle(spark):
         assert finite.size and 150.0 < finite.mean() < 400.0
 
 
-def test_halo_mixed_dn_bt_pair_raises(spark):
-    """Mixed DN/BT band pairs must fail loudly in the halo path too (the
-    batch path already raises)."""
+def _emissivity_one(scenes, meta_df, emis):
+    """lst_tiles_pixel_emissivity with an all-ones plane for every tile."""
+    from pyspark.sql import functions as F
+
+    one = np.ones((32, 32), "<f4").tobytes()
+    etiles = pipeline.parse_scenes(scenes).select(
+        "scene_id", "tile_x", "tile_y").distinct().withColumn(
+        "emis_bytes", F.lit(one))
+    return pipeline.lst_tiles_pixel_emissivity(
+        pipeline.build_enriched(scenes, meta_df, emis), etiles, window=WINDOW)
+
+
+_MIXED_PAIR_OPERATORS = {
+    "lst_tiles": lambda s, m, e: pipeline.lst_tiles(
+        pipeline.build_enriched(s, m, e), window=WINDOW),
+    "lst_pixels": lambda s, m, e: pipeline.lst_pixels(
+        pipeline.build_enriched_with_grid(s, m, e), window=WINDOW),
+    "lst_tiles_pixel_emissivity": _emissivity_one,
+    "lst_tiles_halo": lambda s, m, e: pipeline.lst_tiles_halo(
+        pipeline.build_enriched(s, m, e), window=WINDOW),
+}
+
+
+@pytest.mark.parametrize("operator", list(_MIXED_PAIR_OPERATORS))
+def test_halo_mixed_dn_bt_pair_raises(spark, operator):
+    """Mixed DN/BT band pairs must fail loudly in every fused-kernel
+    operator: the stacked dispatcher and the halo strip emitter share one
+    guard."""
     sid, w, h = "LC08_00000", 32, 32
     rows, *_ = _bt_scene_rows(sid, 1, 1, w, h)
     t = synth.gen_tile(sid, 0, 0, w, h)
@@ -184,10 +209,9 @@ def test_halo_mixed_dn_bt_pair_raises(spark):
     scenes = spark.createDataFrame(pd.DataFrame(rows))
     meta_df = spark.createDataFrame(synth.scene_meta_pdf("tiny"))
     emis = spark.createDataFrame(pd.DataFrame([e._asdict() for e in C.load_emissivities()]))
-    halo = pipeline.lst_tiles_halo(
-        pipeline.build_enriched(scenes, meta_df, emis), window=WINDOW)
+    out = _MIXED_PAIR_OPERATORS[operator](scenes, meta_df, emis)
     with pytest.raises(Exception, match="mixed DN/BT band pair"):
-        halo.collect()
+        out.collect()
 
 
 def test_halo_cross_tile_mixed_bt_raises(spark):
@@ -224,7 +248,7 @@ def test_halo_plane_margin_exceeds_tile_raises(spark):
     import pandas as pd
     import pytest
 
-    from i_landsat8_swlst_spark.pipeline import halo_plane_tiles
+    from i_landsat8_swlst_spark.tileops import halo_plane_tiles
 
     t = np.arange(6, dtype="<f4").reshape(2, 3)
     tiles = spark.createDataFrame(pd.DataFrame([{

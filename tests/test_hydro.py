@@ -288,7 +288,7 @@ def test_tiled_basins_serpentine_long_chain(spark):
 def test_halo_f8_dtype_roundtrip(spark):
     """halo_plane_tiles with dtype='<f8' preserves values f32 cannot
     represent (counts past 2**24)."""
-    from i_landsat8_swlst_spark.pipeline import halo_plane_tiles
+    from i_landsat8_swlst_spark.tileops import halo_plane_tiles
     big = float(2 ** 24 + 1)                   # not representable in f32
     plane = np.full((8, 8), big, dtype=np.float64)
     rows = [{"scene_id": "S0", "tile_x": tx, "tile_y": 0, "w": 8, "h": 8,

@@ -258,7 +258,7 @@ def test_cost_distance_round_shuffles_once(spark):
     import numpy as np
     import pandas as pd
 
-    from i_landsat8_swlst_spark.pipeline import halo_plane_tiles
+    from i_landsat8_swlst_spark.tileops import halo_plane_tiles
 
     plane = np.zeros((16, 16), dtype="<f4")
     state = spark.createDataFrame(pd.DataFrame([{

@@ -149,21 +149,21 @@ def test_ann_ivf_pruned_ranking_equals_brute_cross_join(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# _coalesce_batches: order preserved, min_rows respected
+# coalesce_batches: order preserved, min_rows respected
 # ---------------------------------------------------------------------------
 
 
 def test_coalesce_batches_preserves_rows_and_order():
     import pyarrow as pa
 
-    from i_landsat8_swlst_spark.pipeline import _coalesce_batches
+    from i_landsat8_swlst_spark.tileops import coalesce_batches
 
     batches = [pa.RecordBatch.from_arrays(
         [pa.array(list(range(i * 10, i * 10 + 10)))], names=["x"])
         for i in range(17)]
     batches.insert(5, pa.RecordBatch.from_arrays(
         [pa.array([], type=pa.int64())], names=["x"]))  # empty passthrough
-    out = list(_coalesce_batches(iter(batches), min_rows=64))
+    out = list(coalesce_batches(iter(batches), min_rows=64))
     vals = [v for b in out for v in b.column(0).to_pylist()]
     assert vals == [v for b in batches for v in b.column(0).to_pylist()]
     # all but the tail batch reach the floor
@@ -177,7 +177,7 @@ def test_coalesce_batches_preserves_rows_and_order():
 
 
 def test_spread_tiles_gating(spark, tmp_path):
-    from i_landsat8_swlst_spark.pipeline import spread_tiles
+    from i_landsat8_swlst_spark.tileops import spread_tiles
 
     pdf = pd.DataFrame({"scene_id": ["S"] * 64,
                         "tile_x": list(range(64)), "tile_y": 0,

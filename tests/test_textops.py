@@ -6,6 +6,7 @@ import hashlib
 
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from i_landsat8_swlst_spark.textops import q_simhash64
@@ -254,3 +255,55 @@ def test_decontaminate_bloom_matches_exact(spark):
         .sort_values("lang").reset_index(drop=True)
     pd.testing.assert_frame_equal(exact, bloom)
     assert exact.n_contaminated.sum() > 0  # the case actually exercises hits
+
+
+# --------------------------------------------------------------------------
+# Arrow text passes keep the input's doc_id type: the id column is built
+# from the declared Spark field, so int, bigint and string ids all work.
+# --------------------------------------------------------------------------
+
+
+@pytest.mark.parametrize("id_type", ["int", "bigint", "string"])
+def test_text_arrow_passes_accept_doc_id_type(spark, tmp_path, id_type):
+    from math import log
+
+    from i_landsat8_swlst_spark.textops import (
+        _WINNOW_K, _WINNOW_W, ngram_jaccard_pairs, q_char_entropy,
+        q_winnow_fingerprint)
+
+    texts = {7: "a quick brown fox jumps over it",
+             14: "the exact same document body here",
+             21: "the exact same document body here",
+             42: "zzzz yyyy xxxx wwww"}
+    pdf = pd.DataFrame({"doc_id": list(texts), "text": list(texts.values())})
+    docs = spark.createDataFrame(pdf).withColumn(
+        "doc_id", F.col("doc_id").cast(id_type))
+    docs.write.parquet(str(tmp_path / "documents.parquet"))
+
+    pairs = ngram_jaccard_pairs(docs, df_cap=10**9).toPandas()
+    assert [(int(a), int(b), j) for a, b, j in
+            pairs[["doc_a", "doc_b", "jaccard"]].to_numpy()] == [(14, 21, 1.0)]
+
+    ent = q_char_entropy(spark, str(tmp_path)).toPandas()
+    got = {int(d): (n, a, e) for d, n, a, e in ent[
+        ["doc_id", "n_chars", "alphabet", "entropy_bits"]].to_numpy()}
+    exp = {}
+    for d, t in texts.items():
+        cnt = {c: t.count(c) for c in sorted(set(t))}
+        s = sum(c * log(c) for c in map(float, cnt.values()))
+        exp[d] = (len(t), len(cnt), round((log(len(t)) - s / len(t)) / log(2.0), 6))
+    assert got == exp
+
+    fp = q_winnow_fingerprint(spark, str(tmp_path)).toPandas()
+    got = {int(d): tuple(r) for d, *r in fp[
+        ["doc_id", "n_kgrams", "n_fingerprints", "min_fp", "max_fp"]].to_numpy()}
+    exp = {}
+    for d, t in texts.items():
+        n = len(t) - _WINNOW_K + 1
+        if d % 7 or n < _WINNOW_W:
+            continue
+        h = [int(hashlib.md5(t[i:i + _WINNOW_K].encode()).hexdigest()[:8], 16)
+             for i in range(n)]
+        mins = [min(h[i:i + _WINNOW_W]) for i in range(n - _WINNOW_W + 1)]
+        exp[d] = (n, len(set(mins)), min(mins), max(mins))
+    assert got == exp and len(exp) == 4
