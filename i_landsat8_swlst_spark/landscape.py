@@ -26,8 +26,8 @@ credits and class areas, and emits only O(perimeter + classes) rows:
   kind 5  tile partials      (class, area, within-tile edge credits)
 
 Cross-tile patch stitching is the regions.py decomposition verbatim
-(probe->cell equi join on (scene, gx, gy, class) + bounded-round
-min-label propagation over the patch graph — `regions._cc_min_label`);
+(`regions.stitch_labels`: probe->cell equi join on (scene, class, gx, gy)
++ ONE grouped union-find pass over the patch graph);
 cross-tile edges are one directed probe->cell equi join (right/down
 only, so each boundary crossing is counted exactly once). The pixel
 planes never travel: the exchanges carry border pixels and per-class
@@ -48,8 +48,8 @@ from pyspark.sql.types import (
 
 from . import codecs
 from .multiband import scene_ranges_df
-from .tileops import batch_from_cols, batch_rows
-from .regions import _cc_min_label, _pack_node, label_tile
+from .tileops import batch_from_cols, batch_rows, nominal_dims
+from .regions import _pack_node, border_triples, label_tile, stitch_labels
 from .texture import _quantize
 
 _LS_SCHEMA = StructType([
@@ -111,22 +111,11 @@ def _extract(tiles: DataFrame, src_col: str, levels: int,
                         emit(row.scene_id, 0, c, node[k], area=area[k])
                     emit(row.scene_id, 5, c, area=int(mask.sum()))
                     # class-masked border cells + across-border probes
-                    sides = (
-                        (labels[0, :], np.arange(w), np.zeros(w, np.int64), 0, -1),
-                        (labels[h - 1, :], np.arange(w),
-                         np.full(w, h - 1, np.int64), 0, 1),
-                        (labels[:, 0], np.zeros(h, np.int64), np.arange(h), -1, 0),
-                        (labels[:, w - 1], np.full(h, w - 1, np.int64),
-                         np.arange(h), 1, 0),
-                    )
-                    for slab, xs, ys, dx, dy in sides:
-                        sm = slab >= 0
-                        if not sm.any():
-                            continue
-                        snode = _pack_node(tx, ty, base + slab[sm])
-                        for gx, gy, nd in zip(ox + xs[sm], oy + ys[sm], snode):
-                            emit(row.scene_id, 1, c, nd, gx=gx, gy=gy)
-                            emit(row.scene_id, 2, c, nd, gx=gx + dx, gy=gy + dy)
+                    tri = border_triples(np.where(labels >= 0, base + labels, -1),
+                                         tx, ty, ox, oy)
+                    for nd, gx, gy, px, py in zip(*tri):
+                        emit(row.scene_id, 1, c, nd, gx=gx, gy=gy)
+                        emit(row.scene_id, 2, c, nd, gx=px, gy=py)
                     base += n
 
                 # directed cross-tile edge rows: cells on left/top borders,
@@ -172,29 +161,12 @@ def class_metrics(tiles: DataFrame, src_col: str = "lst_bytes",
     from pyspark import StorageLevel
 
     ranges_df = scene_ranges_df(tiles, src_col)
-    nom = tiles.agg(F.max("w").alias("w"), F.max("h").alias("h")).first()
-    nom_w, nom_h = int(nom["w"]), int(nom["h"])
+    nom_w, nom_h = nominal_dims(tiles)
     ex = _extract(tiles, src_col, levels, ranges_df, nom_w, nom_h) \
         .persist(StorageLevel.MEMORY_AND_DISK)
     try:
         patches = ex.filter("kind = 0")
-        cells = (ex.filter("kind = 1")
-                 .select("scene_id", "cls", "gx", "gy", "node"))
-        probes = (ex.filter("kind = 2")
-                  .select("scene_id", "cls", "gx", "gy",
-                          F.col("node").alias("pnode")))
-        stitched = (
-            probes.join(cells, on=["scene_id", "cls", "gx", "gy"])
-            .filter(F.col("pnode") != F.col("node"))
-            .select("scene_id", F.col("pnode").alias("v"),
-                    F.col("node").alias("u"))
-            .localCheckpoint()
-        )
-        edges = stitched.unionAll(
-            stitched.select("scene_id", F.col("u").alias("v"),
-                            F.col("v").alias("u")))
-        nodes = patches.select("scene_id", F.col("node").alias("v"))
-        lab = _cc_min_label(nodes, edges)
+        lab = stitch_labels(ex, on=("cls",))
 
         patch_px = (
             patches.withColumnRenamed("node", "v")

@@ -12,16 +12,20 @@ distributed decomposition:
    tile labels its own mask with a two-pass run-union algorithm and emits
    (a) one row per LOCAL region with its partial stats and (b) its masked
    border pixels in SCENE pixel coordinates.
-2. **Border stitch** (one equi join): a border pixel at (gx, gy) probes
-   its across-border 4-neighbors; matching (scene, gx, gy) keys yield
-   edges between local-region nodes. Only border pixels — O(perimeter),
-   not O(area) — cross this shuffle.
+2. **Border stitch** (one equi join, `stitch_labels`): a border pixel at
+   (gx, gy) probes its across-border 4-neighbors (`border_triples`);
+   matching (scene, gx, gy) keys yield edges between local-region nodes.
+   Only border pixels — O(perimeter), not O(area) — cross this shuffle.
 3. **Label reduction**: min label per connected component of the region
    graph (one node per LOCAL region, vastly smaller than the pixel
    count), computed by ONE grouped union-find pass per scene — see
    `_cc_min_label`.
 4. **Final fold**: one aggregation keyed by (scene, root label) merges
    the partial stats; every statistic emitted is partial-aggregable.
+
+Steps 2-3 serve every cross-tile connected-component operator (r.lake
+here, landscape patches, segments, to_vect regions): each emits kind
+0/1/2 rows from its own tile pass and calls `stitch_labels`.
 
 Scale shape: pass 1 is pixel-parallel with zero shuffle; passes 2-4 touch
 only region/border rows. The pixel planes never travel.
@@ -35,14 +39,14 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import (
     BinaryType, DoubleType, IntegerType, LongType, StringType, StructField,
     StructType,
 )
 
 from . import codecs
-from .tileops import batch_from_cols, batch_rows
+from .tileops import batch_from_cols, batch_rows, nominal_dims
 
 # ONE extraction pass emits both row kinds (kind 0 = local region with
 # partial stats; kind 1 = masked border cell; kind 2 = across-border probe)
@@ -65,9 +69,19 @@ EXTRACT_SCHEMA = StructType([
 ])
 
 
+_NODE_LIMIT = 1 << 21           # each packed node field is 21 bits
+
+
 def _pack_node(tile_x: int, tile_y: int, label: np.ndarray) -> np.ndarray:
-    # 21 bits each is far beyond any real tile grid; labels are per-tile
-    return (np.int64(tile_x) << 42) | (np.int64(tile_y) << 21) | label.astype(np.int64)
+    """Pack (tile_x, tile_y, per-tile label) into one int64 node id. A
+    field outside [0, 2**21) would spill into its neighbour's bits and
+    alias another tile's node, so it raises."""
+    label = np.asarray(label, dtype=np.int64)
+    if (max(tile_x, tile_y, label.max(initial=0)) >= _NODE_LIMIT
+            or min(tile_x, tile_y, label.min(initial=0)) < 0):
+        raise ValueError(f"_pack_node: tile ({tile_x}, {tile_y}) or a label "
+                         f"is outside the 21-bit node field [0, 2**21)")
+    return (np.int64(tile_x) << 42) | (np.int64(tile_y) << 21) | label
 
 
 def label_tile(mask: np.ndarray) -> tuple[np.ndarray, int]:
@@ -115,6 +129,55 @@ def label_tile(mask: np.ndarray) -> tuple[np.ndarray, int]:
     return labels, 0
 
 
+def border_triples(labels: np.ndarray, tx: int, ty: int, ox: int, oy: int
+                   ) -> tuple[np.ndarray, ...]:
+    """The stitch rows of one labelled tile (``labels`` -1 off the mask,
+    (ox, oy) its scene origin from the NOMINAL tile dims): for every
+    labelled pixel on each tile border, (node, gx, gy, probe_gx, probe_gy)
+    — its packed node, scene cell and the cell one step outward across
+    that border. A pixel on two borders (a corner, a 1-px-wide tile)
+    appears once per border."""
+    h, w = labels.shape
+    xs = np.concatenate([np.arange(w), np.arange(w),
+                         np.zeros(h, np.int64), np.full(h, w - 1)])
+    ys = np.concatenate([np.zeros(w, np.int64), np.full(w, h - 1),
+                         np.arange(h), np.arange(h)])
+    # top, bottom, left, right: probe one step outward
+    dx = np.repeat([0, 0, -1, 1], [w, w, h, h])
+    dy = np.repeat([-1, 1, 0, 0], [w, w, h, h])
+    lab = labels[ys, xs]
+    m = lab >= 0
+    gx, gy = ox + xs[m], oy + ys[m]
+    return _pack_node(tx, ty, lab[m]), gx, gy, gx + dx[m], gy + dy[m]
+
+
+def label_parts(labels: np.ndarray, n: int, plane: np.ndarray, tx: int,
+                ty: int, ox: int, oy: int) -> Iterator[tuple]:
+    """Per-label partial stats of one tile, one tuple per label:
+    (node, area, sum, min, max, gx0, gy0, gx1, gy1) with an inclusive
+    scene-coordinate bbox. Every field folds across tiles with sum / min /
+    max (see `_fold_parts`)."""
+    h, w = labels.shape
+    m = labels >= 0
+    lab = labels[m]
+    vals = plane[m]
+    yy, xx = np.nonzero(m)
+    area = np.bincount(lab, minlength=n)
+    ssum = np.bincount(lab, weights=vals, minlength=n)
+    node = _pack_node(tx, ty, np.arange(n))
+    vmin = np.full(n, np.inf)
+    vmax = np.full(n, -np.inf)
+    np.minimum.at(vmin, lab, vals)
+    np.maximum.at(vmax, lab, vals)
+    x0 = np.full(n, w + 1.0); y0 = np.full(n, h + 1.0)
+    x1 = np.full(n, -1.0); y1 = np.full(n, -1.0)
+    np.minimum.at(x0, lab, xx); np.minimum.at(y0, lab, yy)
+    np.maximum.at(x1, lab, xx); np.maximum.at(y1, lab, yy)
+    for k in range(n):
+        yield (node[k], area[k], ssum[k], vmin[k], vmax[k],
+               ox + x0[k], oy + y0[k], ox + x1[k], oy + y1[k])
+
+
 def _extract_pass(tiles: DataFrame, threshold: float, src_col: str,
                   nom_w: int, nom_h: int) -> DataFrame:
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -143,73 +206,41 @@ def _extract_pass(tiles: DataFrame, threshold: float, src_col: str,
                 # tiles are shorter, and using the local w/h there would
                 # shift their scene coords so border cell/probe joins miss
                 ox, oy = tx * nom_w, ty * nom_h
-
-                m = labels >= 0
-                lab = labels[m]
-                vals = plane[m]
-                yy, xx = np.nonzero(m)
-                area = np.bincount(lab, minlength=n)
-                ssum = np.bincount(lab, weights=vals, minlength=n)
-                node = _pack_node(tx, ty, np.arange(n))
-                vmin = np.full(n, np.inf)
-                vmax = np.full(n, -np.inf)
-                np.minimum.at(vmin, lab, vals)
-                np.maximum.at(vmax, lab, vals)
-                x0 = np.full(n, w + 1.0); y0 = np.full(n, h + 1.0)
-                x1 = np.full(n, -1.0); y1 = np.full(n, -1.0)
-                np.minimum.at(x0, lab, xx); np.minimum.at(y0, lab, yy)
-                np.maximum.at(x1, lab, xx); np.maximum.at(y1, lab, yy)
-                for k in range(n):
-                    emit(row.scene_id, 0, node[k], area[k], ssum[k],
-                         vmin[k], vmax[k], ox + x0[k], oy + y0[k],
-                         ox + x1[k], oy + y1[k])
-
-                # masked border pixels + their across-border probes;
-                # only O(perimeter) rows per tile
-                sides = (
-                    (labels[0, :], np.arange(w), np.zeros(w, np.int64), 0, -1),
-                    (labels[h - 1, :], np.arange(w), np.full(w, h - 1, np.int64), 0, 1),
-                    (labels[:, 0], np.zeros(h, np.int64), np.arange(h), -1, 0),
-                    (labels[:, w - 1], np.full(h, w - 1, np.int64), np.arange(h), 1, 0),
-                )
-                for slab, xs, ys, dx, dy in sides:
-                    sm = slab >= 0
-                    if not sm.any():
-                        continue
-                    snode = _pack_node(tx, ty, slab[sm])
-                    for gx, gy, nd in zip(ox + xs[sm], oy + ys[sm], snode):
-                        emit(row.scene_id, 1, nd, gx=gx, gy=gy)
-                        emit(row.scene_id, 2, nd, gx=gx + dx, gy=gy + dy)
+                for part in label_parts(labels, n, plane, tx, ty, ox, oy):
+                    emit(row.scene_id, 0, *part)
+                for nd, gx, gy, px, py in zip(*border_triples(labels, tx, ty, ox, oy)):
+                    emit(row.scene_id, 1, nd, gx=gx, gy=gy)
+                    emit(row.scene_id, 2, nd, gx=px, gy=py)
             if cols["scene_id"]:
                 yield batch_from_cols(cols, EXTRACT_SCHEMA)
 
     return tiles.mapInArrow(fn, EXTRACT_SCHEMA)
 
 
-def _cc_min_label(nodes: DataFrame, edges: DataFrame, key: str = "scene_id") -> DataFrame:
-    """Per-(key) minimum label over connected components: each node row
-    (key, v) gets label = min node id reachable from it through (key, v, u)
-    edges — exactly the fixpoint of min-label propagation, computed in ONE
-    grouped union-find pass instead of O(graph diameter) join rounds.
+def _cc_min_label(nodes: DataFrame, edges: DataFrame) -> DataFrame:
+    """Per-scene minimum label over connected components: each node row
+    (scene_id, v) gets label = min node id reachable from it through its
+    scene's (v, u) edges — exactly the fixpoint of min-label propagation,
+    computed in ONE grouped union-find pass instead of O(diameter) rounds.
 
     The old shape paid ~4 Spark jobs (two equi joins + checkpoint + change
     count) PER ROUND; a chain of regions across k tiles took k rounds, so
     wall time was diameter-bound with tiny data per round (measured 15 s of
-    a 21 s to_vect on a 1 Mpx scene). A key's stitch graph is O(local
+    a 21 s to_vect on a 1 Mpx scene). A scene's stitch graph is O(local
     regions + cross-tile adjacencies) small rows — the same per-task bound
     the ring/sector assemblies already accept — so the whole reduction fits
-    one applyInPandas task per key: one exchange, zero iteration, labels
+    one applyInPandas task per scene: one exchange, zero iteration, labels
     IDENTICAL (min over component is order-free)."""
     sch = StructType([
-        StructField(key, StringType()),
+        StructField("scene_id", StringType()),
         StructField("v", LongType()),
         StructField("label", LongType()),
     ])
     # node rows carry u = -1 (node ids are packed nonnegative int64); a
     # NULL here would make pandas coerce the long column to float64 and
     # corrupt ids above 2^53 (packed tile_x >= 2^11)
-    both = (nodes.select(key, "v", F.lit(-1).cast("long").alias("u"))
-            .unionAll(edges.select(key, F.col("v").cast("long"),
+    both = (nodes.select("scene_id", "v", F.lit(-1).cast("long").alias("u"))
+            .unionAll(edges.select("scene_id", F.col("v").cast("long"),
                                    F.col("u").cast("long"))))
 
     def uf(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -232,13 +263,71 @@ def _cc_min_label(nodes: DataFrame, edges: DataFrame, key: str = "scene_id") -> 
                 parent[max(ra, rb)] = min(ra, rb)  # root = component min
         node_v = pdf.v.to_numpy(np.int64)[~em]
         return pd.DataFrame({
-            key: pdf[key].to_numpy()[~em],
+            "scene_id": pdf["scene_id"].to_numpy()[~em],
             "v": node_v,
             "label": np.fromiter((find(int(a)) for a in node_v),
                                  dtype=np.int64, count=len(node_v)),
         })
 
-    return both.groupBy(key).applyInPandas(lambda _k, pdf: uf(pdf), sch)
+    return both.groupBy("scene_id").applyInPandas(lambda _k, pdf: uf(pdf), sch)
+
+
+def _stitch_join(ex: DataFrame, on: tuple[str, ...] = (),
+                 accept: Column | None = None) -> DataFrame:
+    """The border stitch of an extract frame, unmaterialized: every kind-2
+    probe equi-joined to the kind-1 cell it lands on (keys scene_id, *on,
+    gx, gy), kept when the two nodes differ and ``accept`` holds. In
+    ``accept`` the cell's columns keep their names and the probe's carry a
+    ``p`` prefix (``pval``). Returns directed edges (scene_id, v, u) with
+    v the probing node. Column pruning trims both sides to the keys and
+    the columns the filter reads, so only those cross the exchange."""
+    keys = ["scene_id", *on, "gx", "gy"]
+    rest = [c for c in ex.columns if c not in keys]
+    cells = ex.filter("kind = 1").select(*keys, *rest)
+    probes = ex.filter("kind = 2").select(
+        *keys, *(F.col(c).alias("p" + c) for c in rest))
+    keep = F.col("pnode") != F.col("node")
+    if accept is not None:
+        keep = keep & accept
+    return (probes.join(cells, on=keys).filter(keep)
+            .select("scene_id", F.col("pnode").alias("v"),
+                    F.col("node").alias("u")))
+
+
+def stitch_labels(ex: DataFrame, on: tuple[str, ...] = (),
+                  accept: Column | None = None) -> DataFrame:
+    """Global labels for the local nodes of a persisted extract frame
+    (kind 0 = node, 1 = border cell, 2 = across-border probe, the rows
+    `border_triples` yields): the probe->cell stitch (`_stitch_join`),
+    materialized once, symmetrised, and reduced by `_cc_min_label`.
+    Returns (scene_id, v, label) for every kind-0 node; label is the
+    smallest node id of its cross-tile component."""
+    stitched = _stitch_join(ex, on, accept).localCheckpoint()
+    edges = stitched.unionAll(
+        stitched.select("scene_id", F.col("u").alias("v"),
+                        F.col("v").alias("u")))
+    nodes = ex.filter("kind = 0").select("scene_id", F.col("node").alias("v"))
+    return _cc_min_label(nodes, edges)
+
+
+def _fold_parts(parts: DataFrame, lab: DataFrame, id_col: str) -> DataFrame:
+    """Fold the kind-0 `label_parts` rows of each global label into one
+    row: scene_id, ``id_col`` (the label), area_px, mean_val, min_val,
+    max_val, gx0/gy0/gx1/gy1 and n_parts (tile-local parts merged),
+    materialized so the caller can release the extract frame."""
+    return (
+        parts.withColumnRenamed("node", "v")
+        .join(lab, on=["scene_id", "v"])
+        .groupBy("scene_id", F.col("label").alias(id_col))
+        .agg(F.sum("area_px").alias("area_px"),
+             (F.sum("sum_val") / F.sum("area_px")).alias("mean_val"),
+             F.min("min_val").alias("min_val"),
+             F.max("max_val").alias("max_val"),
+             F.min("gx0").alias("gx0"), F.min("gy0").alias("gy0"),
+             F.max("gx1").alias("gx1"), F.max("gy1").alias("gy1"),
+             F.count(F.lit(1)).alias("n_parts"))
+        .localCheckpoint()
+    )
 
 
 def extract_regions(tiles: DataFrame, threshold: float,
@@ -258,42 +347,12 @@ def extract_regions(tiles: DataFrame, threshold: float,
     # for the multi-consumer graph below is the scale-correct move
     from pyspark import StorageLevel
 
-    # nominal (non-ragged) tile dims: one tiny metadata-only job (same
-    # convention as hydro.basin_tiles); every interior tile has these dims
-    nom = tiles.agg(F.max("w").alias("w"), F.max("h").alias("h")).first()
-    nom_w, nom_h = int(nom["w"]), int(nom["h"])
+    nom_w, nom_h = nominal_dims(tiles)
     ex = _extract_pass(tiles, threshold, src_col, nom_w, nom_h) \
         .persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        regions = ex.filter("kind = 0")
-        cells = ex.filter("kind = 1").select("scene_id", "gx", "gy", "node")
-        probes = (ex.filter("kind = 2")
-                  .select("scene_id", "gx", "gy", F.col("node").alias("pnode")))
-        stitched = (
-            probes.join(cells, on=["scene_id", "gx", "gy"])
-            .filter(F.col("pnode") != F.col("node"))
-            .select("scene_id", F.col("pnode").alias("v"), F.col("node").alias("u"))
-            .localCheckpoint()
-        )
-        edges = stitched.unionAll(
-            stitched.select("scene_id", F.col("u").alias("v"), F.col("v").alias("u")))
-
-        nodes = regions.select("scene_id", F.col("node").alias("v"))
-        lab = _cc_min_label(nodes, edges)
-
-        return (
-            regions.withColumnRenamed("node", "v")
-            .join(lab, on=["scene_id", "v"])
-            .groupBy("scene_id", F.col("label").alias("region_id"))
-            .agg(F.sum("area_px").alias("area_px"),
-                 (F.sum("sum_val") / F.sum("area_px")).alias("mean_val"),
-                 F.min("min_val").alias("min_val"),
-                 F.max("max_val").alias("max_val"),
-                 F.min("gx0").alias("gx0"), F.min("gy0").alias("gy0"),
-                 F.max("gx1").alias("gx1"), F.max("gy1").alias("gy1"),
-                 F.count(F.lit(1)).alias("n_parts"))
-            .localCheckpoint()  # materialize before unpersisting the base
-        )
+        return _fold_parts(ex.filter("kind = 0"), stitch_labels(ex),
+                           "region_id")
     finally:
         ex.unpersist()
 
@@ -369,22 +428,9 @@ def _lake_pass(tiles: DataFrame, level: float, src_col: str,
                 for node in _pack_node(tx, ty, np.arange(n)):
                     emit(row.scene_id, 0, node, tx=tx, ty=ty)
                 ox, oy = tx * nom_w, ty * nom_h
-                sides = (
-                    (labels[0, :], np.arange(w), np.zeros(w, np.int64), 0, -1),
-                    (labels[h - 1, :], np.arange(w),
-                     np.full(w, h - 1, np.int64), 0, 1),
-                    (labels[:, 0], np.zeros(h, np.int64), np.arange(h), -1, 0),
-                    (labels[:, w - 1], np.full(h, w - 1, np.int64),
-                     np.arange(h), 1, 0),
-                )
-                for slab, xs, ys, dx, dy in sides:
-                    sm = slab >= 0
-                    if not sm.any():
-                        continue
-                    snode = _pack_node(tx, ty, slab[sm])
-                    for gx, gy, nd in zip(ox + xs[sm], oy + ys[sm], snode):
-                        emit(row.scene_id, 1, nd, gx=gx, gy=gy)
-                        emit(row.scene_id, 2, nd, gx=gx + dx, gy=gy + dy)
+                for nd, gx, gy, px, py in zip(*border_triples(labels, tx, ty, ox, oy)):
+                    emit(row.scene_id, 1, nd, gx=gx, gy=gy)
+                    emit(row.scene_id, 2, nd, gx=px, gy=py)
             if cols["scene_id"]:
                 yield batch_from_cols(cols, _LAKE_PASS_SCHEMA)
 
@@ -405,34 +451,19 @@ def lake_tiles(tiles: DataFrame, seeds: DataFrame, level: float,
     refuses seeds above the water level too.
 
     Plan: ONE decode+label pass (planes + O(perimeter) stitch rows), the
-    extract_regions min-label fixpoint on the border graph (bounded
-    equi-joins, diameter rounds), a broadcast seed lookup, then ONE hash
+    `stitch_labels` border equi join and ONE grouped union-find pass over
+    the node graph (`_cc_min_label`), a broadcast seed lookup, then ONE hash
     join of the kept node labels back to the label planes on the tile key.
     Pixel bytes cross the wire once as label+depth planes; everything else
     is O(regions + perimeter).
     """
     from pyspark import StorageLevel
 
-    nom = tiles.agg(F.max("w").alias("w"), F.max("h").alias("h")).first()
-    nom_w, nom_h = int(nom["w"]), int(nom["h"])
+    nom_w, nom_h = nominal_dims(tiles)
     ex = _lake_pass(tiles, level, src_col, nom_w, nom_h) \
         .persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        nodes = ex.filter("kind = 0").select("scene_id", F.col("node").alias("v"))
-        cells = ex.filter("kind = 1").select("scene_id", "gx", "gy", "node")
-        probes = (ex.filter("kind = 2")
-                  .select("scene_id", "gx", "gy", F.col("node").alias("pnode")))
-        stitched = (
-            probes.join(cells, on=["scene_id", "gx", "gy"])
-            .filter(F.col("pnode") != F.col("node"))
-            .select("scene_id", F.col("pnode").alias("v"),
-                    F.col("node").alias("u"))
-            .localCheckpoint()
-        )
-        edges = stitched.unionAll(
-            stitched.select("scene_id", F.col("u").alias("v"),
-                            F.col("v").alias("u")))
-        lab = _cc_min_label(nodes, edges)
+        lab = stitch_labels(ex)
 
         planes = ex.filter("kind = 3").select(
             "scene_id", "tile_x", "tile_y", "w", "h",

@@ -20,9 +20,9 @@ Decomposition (the regions.py pattern with a value predicate):
    carry their VALUE; a probe->cell match becomes an edge iff the
    cross-border pair satisfies the same |Δ| <= lam predicate. Only
    O(perimeter) rows shuffle.
-3. **Label reduction**: bounded-round min-label propagation over the
-   segment graph (`regions._cc_min_label` — nodes are LOCAL segments,
-   vastly fewer than pixels).
+3. **Label reduction**: ONE grouped union-find pass over the segment
+   graph (`regions.stitch_labels` — nodes are LOCAL segments, vastly
+   fewer than pixels).
 4. **Final fold**: ONE aggregation merges the partial stats (area, sum,
    min, max, scene-coordinate bbox — all partial-aggregable).
 
@@ -38,13 +38,13 @@ import numpy as np
 import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import (
-    DoubleType, IntegerType, LongType, StringType, StructField, StructType,
-)
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 from . import codecs
-from .tileops import batch_from_cols, batch_rows
-from .regions import _cc_min_label, _pack_node
+from .tileops import batch_from_cols, batch_rows, nominal_dims
+from .regions import (
+    EXTRACT_SCHEMA, _fold_parts, border_triples, label_parts, stitch_labels,
+)
 
 
 def lambda_label(plane: np.ndarray, lam: float) -> tuple[np.ndarray, int]:
@@ -104,22 +104,9 @@ def lambda_label(plane: np.ndarray, lam: float) -> tuple[np.ndarray, int]:
     return labels.reshape(h, w), k
 
 
-_SEG_SCHEMA = StructType([
-    StructField("scene_id", StringType()),
-    StructField("kind", IntegerType()),
-    StructField("node", LongType()),
-    StructField("area_px", LongType()),
-    StructField("sum_val", DoubleType()),
-    StructField("min_val", DoubleType()),
-    StructField("max_val", DoubleType()),
-    StructField("gx0", IntegerType()),
-    StructField("gy0", IntegerType()),
-    StructField("gx1", IntegerType()),
-    StructField("gy1", IntegerType()),
-    StructField("gx", IntegerType()),
-    StructField("gy", IntegerType()),
-    StructField("val", DoubleType()),
-])
+# the extract_regions row layout plus the border pixel's value
+_SEG_SCHEMA = StructType(
+    EXTRACT_SCHEMA.fields + [StructField("val", DoubleType())])
 
 
 def _seg_extract(tiles: DataFrame, lam: float, src_col: str,
@@ -150,45 +137,14 @@ def _seg_extract(tiles: DataFrame, lam: float, src_col: str,
                 # nominal dims, not this tile's — ragged edge tiles would
                 # otherwise mis-place their scene coords (see extract_regions)
                 ox, oy = tx * nom_w, ty * nom_h
-                m = labels >= 0
-                lab = labels[m]
-                vals = plane[m]
-                yy, xx = np.nonzero(m)
-                area = np.bincount(lab, minlength=n)
-                ssum = np.bincount(lab, weights=vals, minlength=n)
-                node = _pack_node(tx, ty, np.arange(n))
-                vmin = np.full(n, np.inf); vmax = np.full(n, -np.inf)
-                np.minimum.at(vmin, lab, vals)
-                np.maximum.at(vmax, lab, vals)
-                x0 = np.full(n, w + 1.0); y0 = np.full(n, h + 1.0)
-                x1 = np.full(n, -1.0); y1 = np.full(n, -1.0)
-                np.minimum.at(x0, lab, xx); np.minimum.at(y0, lab, yy)
-                np.maximum.at(x1, lab, xx); np.maximum.at(y1, lab, yy)
-                for k in range(n):
-                    emit(row.scene_id, 0, node[k], area[k], ssum[k],
-                         vmin[k], vmax[k], ox + x0[k], oy + y0[k],
-                         ox + x1[k], oy + y1[k])
+                for part in label_parts(labels, n, plane, tx, ty, ox, oy):
+                    emit(row.scene_id, 0, *part)
                 # valid border pixels (value-carrying) + across-border probes
-                sides = (
-                    (labels[0, :], plane[0, :], np.arange(w),
-                     np.zeros(w, np.int64), 0, -1),
-                    (labels[h - 1, :], plane[h - 1, :], np.arange(w),
-                     np.full(w, h - 1, np.int64), 0, 1),
-                    (labels[:, 0], plane[:, 0], np.zeros(h, np.int64),
-                     np.arange(h), -1, 0),
-                    (labels[:, w - 1], plane[:, w - 1],
-                     np.full(h, w - 1, np.int64), np.arange(h), 1, 0),
-                )
-                for slab, svals, xs, ys, dx, dy in sides:
-                    sm = slab >= 0
-                    if not sm.any():
-                        continue
-                    snode = _pack_node(tx, ty, slab[sm])
-                    for gx, gy, nd, v in zip(ox + xs[sm], oy + ys[sm],
-                                             snode, svals[sm]):
-                        emit(row.scene_id, 1, nd, gx=gx, gy=gy, val=v)
-                        emit(row.scene_id, 2, nd, gx=gx + dx, gy=gy + dy,
-                             val=v)
+                nodes, gxs, gys, pxs, pys = border_triples(labels, tx, ty, ox, oy)
+                for nd, gx, gy, px, py, v in zip(nodes, gxs, gys, pxs, pys,
+                                                 plane[gys - oy, gxs - ox]):
+                    emit(row.scene_id, 1, nd, gx=gx, gy=gy, val=v)
+                    emit(row.scene_id, 2, nd, gx=px, gy=py, val=v)
             if cols["scene_id"]:
                 yield batch_from_cols(cols, _SEG_SCHEMA)
 
@@ -211,43 +167,12 @@ def segment_tiles(tiles: DataFrame, lam: float,
         raise ValueError(f"lam must be finite and >= 0, got {lam}")
     from pyspark import StorageLevel
 
-    nom = tiles.agg(F.max("w").alias("w"), F.max("h").alias("h")).first()
-    nom_w, nom_h = int(nom["w"]), int(nom["h"])
+    nom_w, nom_h = nominal_dims(tiles)
     ex = _seg_extract(tiles, lam, src_col, nom_w, nom_h) \
         .persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        segs = ex.filter("kind = 0")
-        cells = ex.filter("kind = 1").select("scene_id", "gx", "gy",
-                                             "node", "val")
-        probes = (ex.filter("kind = 2")
-                  .select("scene_id", "gx", "gy",
-                          F.col("node").alias("pnode"),
-                          F.col("val").alias("pval")))
-        stitched = (
-            probes.join(cells, on=["scene_id", "gx", "gy"])
-            .filter((F.col("pnode") != F.col("node"))
-                    & (F.abs(F.col("pval") - F.col("val")) <= F.lit(lam)))
-            .select("scene_id", F.col("pnode").alias("v"),
-                    F.col("node").alias("u"))
-            .localCheckpoint()
-        )
-        edges = stitched.unionAll(
-            stitched.select("scene_id", F.col("u").alias("v"),
-                            F.col("v").alias("u")))
-        nodes = segs.select("scene_id", F.col("node").alias("v"))
-        lab = _cc_min_label(nodes, edges)
-        return (
-            segs.withColumnRenamed("node", "v")
-            .join(lab, on=["scene_id", "v"])
-            .groupBy("scene_id", F.col("label").alias("segment_id"))
-            .agg(F.sum("area_px").alias("area_px"),
-                 (F.sum("sum_val") / F.sum("area_px")).alias("mean_val"),
-                 F.min("min_val").alias("min_val"),
-                 F.max("max_val").alias("max_val"),
-                 F.min("gx0").alias("gx0"), F.min("gy0").alias("gy0"),
-                 F.max("gx1").alias("gx1"), F.max("gy1").alias("gy1"),
-                 F.count(F.lit(1)).alias("n_parts"))
-            .localCheckpoint()
-        )
+        lab = stitch_labels(
+            ex, accept=F.abs(F.col("pval") - F.col("val")) <= F.lit(lam))
+        return _fold_parts(ex.filter("kind = 0"), lab, "segment_id")
     finally:
         ex.unpersist()

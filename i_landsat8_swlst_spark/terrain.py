@@ -66,7 +66,7 @@ from pyspark.sql.types import (
 )
 
 from . import codecs
-from .tileops import batch_from_cols, batch_rows, halo_plane_tiles
+from .tileops import batch_from_cols, batch_rows, halo_plane_tiles, nominal_dims
 
 _CELL_SCHEMA = StructType([
     StructField("scene_id", StringType()),
@@ -405,8 +405,7 @@ def viewshed_tiles(tiles: DataFrame, observers, obs_height: float = 1.75,
     obs_df = obs_df.select("scene_id", F.col("ox").cast("double"),
                            F.col("oy").cast("double"))
 
-    nom = tiles.agg(F.max("w").alias("w"), F.max("h").alias("h")).first()
-    nom_w, nom_h = int(nom["w"]), int(nom["h"])
+    nom_w, nom_h = nominal_dims(tiles)
 
     cells = _sector_pass(tiles, obs_df, n_sectors, max_dist,
                          nom_w, nom_h, src_col)
@@ -708,8 +707,7 @@ def sun_tiles(tiles: DataFrame, sun: DataFrame | pd.DataFrame,
         {r.scene_id: (float(r.azimuth_deg), float(r.altitude_deg))
          for r in sun_pdf.itertuples()})
 
-    nom = tiles.agg(F.max("w").alias("w"), F.max("h").alias("h")).first()
-    nom_w, nom_h = int(nom["w"]), int(nom["h"])
+    nom_w, nom_h = nominal_dims(tiles)
 
     def emit_segments(batches: Iterator[pa.RecordBatch]) \
             -> Iterator[pa.RecordBatch]:
@@ -985,8 +983,7 @@ def viewshed_count_tiles(tiles: DataFrame, observers,
         raise ValueError("duplicate (scene_id, obs_id)")
     two_pi = 2.0 * math.pi
 
-    nom = tiles.agg(F.max("w").alias("w"), F.max("h").alias("h")).first()
-    nom_w, nom_h = int(nom["w"]), int(nom["h"])
+    nom_w, nom_h = nominal_dims(tiles)
 
     by_scene: dict[str, list] = {}
     for r in obs_pdf.itertuples():
@@ -1338,8 +1335,7 @@ def horizon_tiles(tiles: DataFrame, azimuths, src_col: str = "lst_bytes"
         raise ValueError("horizon_tiles needs at least one azimuth")
     if len(set(azs)) != len(azs):
         raise ValueError("duplicate azimuths")
-    nom = tiles.agg(F.max("w").alias("w"), F.max("h").alias("h")).first()
-    nom_w, nom_h = int(nom["w"]), int(nom["h"])
+    nom_w, nom_h = nominal_dims(tiles)
 
     def emit(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:

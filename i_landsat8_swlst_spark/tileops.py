@@ -92,6 +92,15 @@ def finite_stats(a: np.ndarray) -> tuple[int, float | None, float | None, float 
     return int(v.size), float(v.min()), float(v.max()), float(v.mean())
 
 
+def nominal_dims(tiles: DataFrame) -> tuple[int, int]:
+    """The tile table's NOMINAL (max-over-grid) tile dims (w, h), from one
+    tiny metadata-only job. Every interior tile has these dims; ragged
+    right/bottom-edge tiles are smaller, so scene pixel coordinates are
+    tile_x * w + px and tile_y * h + py with these, never the tile's own."""
+    nom = tiles.agg(F.max("w").alias("w"), F.max("h").alias("h")).first()
+    return int(nom["w"]), int(nom["h"])
+
+
 def spread_tiles(tiles: DataFrame) -> DataFrame:
     """Round-robin repartition a tile table up to the core count when the
     incoming layout cannot scan with enough effective parallelism.

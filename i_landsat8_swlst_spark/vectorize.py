@@ -20,7 +20,7 @@ extract_regions (whose label fixpoint this reuses):
 2. Pending edges resolve with one LEFT ANTI equi join against the masked
    border cells: a pending side is a true boundary iff no masked cell sits
    across it (a missing neighbor tile = scene edge = boundary, for free).
-3. The min-label fixpoint (regions._cc_min_label) maps each edge's local
+3. The shared label stitch (regions.stitch_labels) maps each edge's local
    node to its global region id — edges are O(perimeter) rows, pixels
    never shuffle.
 4. One groupBy(scene, region) + applyInPandas stitches the directed edges
@@ -64,8 +64,8 @@ from pyspark.sql.types import (
 )
 
 from . import codecs
-from .tileops import batch_from_cols, batch_rows, halo_plane_tiles
-from .regions import _cc_min_label, _pack_node, label_tile
+from .tileops import batch_from_cols, batch_rows, halo_plane_tiles, nominal_dims
+from .regions import _pack_node, border_triples, label_tile, stitch_labels
 
 # one pass emits every row kind so each tile is decoded and labeled once:
 # kind 0 = local region node, 1 = masked border cell, 2 = across-border
@@ -145,22 +145,10 @@ def _tovect_pass(tiles: DataFrame, threshold: float, src_col: str,
 
                 # masked border cells + probes (kinds 1/2) — the stitch
                 # triple, same shape as regions._extract_pass
-                sides = (
-                    (labels[0, :], np.arange(w), np.zeros(w, np.int64), 0, -1),
-                    (labels[h - 1, :], np.arange(w),
-                     np.full(w, h - 1, np.int64), 0, 1),
-                    (labels[:, 0], np.zeros(h, np.int64), np.arange(h), -1, 0),
-                    (labels[:, w - 1], np.full(h, w - 1, np.int64),
-                     np.arange(h), 1, 0),
-                )
-                for slab, xs, ys, dx, dy in sides:
-                    sm = slab >= 0
-                    if not sm.any():
-                        continue
-                    snode = _pack_node(tx, ty, slab[sm])
-                    for gx, gy, nd in zip(ox + xs[sm], oy + ys[sm], snode):
-                        emit(row.scene_id, 1, nd, gx=gx, gy=gy)
-                        emit(row.scene_id, 2, nd, gx=gx + dx, gy=gy + dy)
+                tri = border_triples(labels, tx, ty, ox, oy)
+                for nd, gx, gy, px, py in zip(*tri):
+                    emit(row.scene_id, 1, nd, gx=gx, gy=gy)
+                    emit(row.scene_id, 2, nd, gx=px, gy=py)
 
                 # ---- boundary edges ----
                 # interior sides (both pixels in this tile) resolve locally
@@ -180,31 +168,20 @@ def _tovect_pass(tiles: DataFrame, threshold: float, src_col: str,
                                    _pack_node(tx, ty, labels[yy, xx]),
                                    ox + xx, oy + yy, b, pend=False)
 
-                # tile-border sides: scene edge (no neighbor possible) is a
-                # definite boundary; otherwise pending on the neighbor cell
-                edge_specs = (
-                    ("top", mask[0, :], np.arange(w),
-                     np.zeros(w, np.int64), 0, -1, ty == 0),
-                    ("bottom", mask[h - 1, :], np.arange(w),
-                     np.full(w, h - 1, np.int64), 0, 1, False),
-                    ("left", mask[:, 0], np.zeros(h, np.int64),
-                     np.arange(h), -1, 0, tx == 0),
-                    ("right", mask[:, w - 1], np.full(h, w - 1, np.int64),
-                     np.arange(h), 1, 0, False),
-                )
-                for side, sm, xs, ys, dx, dy, definite in edge_specs:
-                    idx = np.nonzero(sm)[0]
-                    if not len(idx):
-                        continue
-                    xs_, ys_ = xs[idx], ys[idx]
-                    nodes = _pack_node(tx, ty, labels[ys_, xs_])
+                # tile-border sides — the stitch triples again, the probe
+                # being the neighbor cell: a scene edge (no neighbor
+                # possible) is a definite boundary, else pending on it
+                nodes, gx, gy, px, py = tri
+                for side, on, definite in (("top", py < gy, ty == 0),
+                                           ("bottom", py > gy, False),
+                                           ("left", px < gx, tx == 0),
+                                           ("right", px > gx, False)):
                     if definite:
-                        emit_edges(row.scene_id, nodes, ox + xs_, oy + ys_,
+                        emit_edges(row.scene_id, nodes[on], gx[on], gy[on],
                                    side, pend=False)
                     else:
-                        emit_edges(row.scene_id, nodes, ox + xs_, oy + ys_,
-                                   side, pend=True,
-                                   pgx=ox + xs_ + dx, pgy=oy + ys_ + dy)
+                        emit_edges(row.scene_id, nodes[on], gx[on], gy[on],
+                                   side, pend=True, pgx=px[on], pgy=py[on])
             if cols["scene_id"]:
                 yield batch_from_cols(cols, _TOVECT_PASS_SCHEMA)
 
@@ -296,6 +273,17 @@ def _assemble_ring_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
             else pd.DataFrame(columns=[f.name for f in TOVECT_SCHEMA]))
 
 
+def _pending_edges(ex: DataFrame) -> DataFrame:
+    """The pending kind-4 edges of a `_tovect_pass` frame that are true
+    boundaries — no masked border cell sits across them (one LEFT ANTI
+    equi join on the neighbor cell) — as (scene_id, node, x0, y0, x1, y1)."""
+    keys = ["scene_id", "gx", "gy"]
+    return (ex.filter("kind = 4")
+            .join(ex.filter("kind = 1").select(*keys), on=keys,
+                  how="left_anti")
+            .select("scene_id", "node", "x0", "y0", "x1", "y1"))
+
+
 def to_vect(tiles: DataFrame, threshold: float,
             src_col: str = "lst_bytes") -> DataFrame:
     """r.to.vect type=area over the thresholded plane (mask contract
@@ -309,38 +297,15 @@ def to_vect(tiles: DataFrame, threshold: float,
     """
     from pyspark import StorageLevel
 
-    nom = tiles.agg(F.max("w").alias("w"), F.max("h").alias("h")).first()
-    nom_w, nom_h = int(nom["w"]), int(nom["h"])
+    nom_w, nom_h = nominal_dims(tiles)
     ex = _tovect_pass(tiles, threshold, src_col, nom_w, nom_h) \
         .persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        nodes = ex.filter("kind = 0").select("scene_id",
-                                             F.col("node").alias("v"))
-        cells = ex.filter("kind = 1").select("scene_id", "gx", "gy", "node")
-        probes = (ex.filter("kind = 2")
-                  .select("scene_id", "gx", "gy", F.col("node").alias("pnode")))
-        stitched = (
-            probes.join(cells, on=["scene_id", "gx", "gy"])
-            .filter(F.col("pnode") != F.col("node"))
-            .select("scene_id", F.col("pnode").alias("v"),
-                    F.col("node").alias("u"))
-            .localCheckpoint()
-        )
-        edges_cc = stitched.unionAll(
-            stitched.select("scene_id", F.col("u").alias("v"),
-                            F.col("v").alias("u")))
-        lab = _cc_min_label(nodes, edges_cc)
-
+        lab = stitch_labels(ex)
         resolved = ex.filter("kind = 3") \
             .select("scene_id", "node", "x0", "y0", "x1", "y1")
-        pending = (
-            ex.filter("kind = 4")
-            .join(cells.select("scene_id", "gx", "gy"),
-                  on=["scene_id", "gx", "gy"], how="left_anti")
-            .select("scene_id", "node", "x0", "y0", "x1", "y1")
-        )
         bedges = (
-            resolved.unionAll(pending)
+            resolved.unionAll(_pending_edges(ex))
             .join(lab.withColumnRenamed("v", "node"), on=["scene_id", "node"])
             .select("scene_id", F.col("label").alias("region_id"),
                     "x0", "y0", "x1", "y1")
@@ -660,8 +625,7 @@ def contour_lines(tiles: DataFrame, levels: Sequence[float],
     only halo strips and O(contour) segment rows move."""
     if not levels:
         raise ValueError("contour_lines needs at least one level")
-    nom = tiles.agg(F.max("w").alias("w"), F.max("h").alias("h")).first()
-    nom_w, nom_h = int(nom["w"]), int(nom["h"])
+    nom_w, nom_h = nominal_dims(tiles)
     padded = halo_plane_tiles(tiles, r=1, src_col=src_col)
     segs = _contour_pass(padded, levels, nom_w, nom_h)
     return segs.groupBy("scene_id", "level").applyInPandas(

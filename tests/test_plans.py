@@ -223,8 +223,8 @@ def test_enrich_pixels_is_single_arrow_hop_no_exchange(spark):
 def test_extract_regions_stitch_is_equi(spark):
     """The border stitch must stay an EQUI join on (scene_id, gx, gy) —
     the only shuffle that touches per-pixel (border) rows. extract_regions
-    runs eagerly (iterative CC inside), so gate the stitch stage's plan
-    directly on the same dataframes the operator builds."""
+    runs eagerly (iterative CC inside), so gate the unmaterialized stitch
+    join `stitch_labels` runs on the operator's own extract frame."""
     import numpy as np
     import pandas as pd
 
@@ -241,10 +241,7 @@ def test_extract_regions_stitch_is_equi(spark):
                          "lst_bytes": t.astype("<f4").tobytes()})
     tiles = spark.createDataFrame(pd.DataFrame(rows))
     ex = regions._extract_pass(tiles, 300.0, "lst_bytes", 32, 32)
-    cells = ex.filter("kind = 1").select("scene_id", "gx", "gy", "node")
-    probes = (ex.filter("kind = 2")
-              .select("scene_id", "gx", "gy", F.col("node").alias("pnode")))
-    plan = _plan(probes.join(cells, on=["scene_id", "gx", "gy"]))
+    plan = _plan(regions._stitch_join(ex))
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
     assert "HashJoin" in plan or "SortMergeJoin" in plan
@@ -358,12 +355,12 @@ def test_pca_moments_single_aggregation_no_join(spark):
 def test_landscape_stitch_and_edge_joins_are_equi(spark):
     """Both perimeter-row joins in landscape.class_metrics must stay EQUI:
     the class-aware patch stitch on (scene, cls, gx, gy) and the directed
-    cross-tile edge join on (scene, gx, gy). Gated on the same dataframes
-    the operator builds (class_metrics itself runs eagerly)."""
+    cross-tile edge join on (scene, gx, gy). Gated on the joins the
+    operator runs (class_metrics itself runs eagerly)."""
     import numpy as np
     import pandas as pd
 
-    from i_landsat8_swlst_spark import landscape
+    from i_landsat8_swlst_spark import landscape, regions
 
     rng = np.random.default_rng(71)
     plane = np.kron(rng.uniform(260, 330, (4, 4)), np.ones((8, 8)))
@@ -378,11 +375,7 @@ def test_landscape_stitch_and_edge_joins_are_equi(spark):
     from i_landsat8_swlst_spark.multiband import scene_ranges_df
     ex = landscape._extract(tiles, "lst_bytes", 4,
                             scene_ranges_df(tiles, "lst_bytes"), 16, 16)
-    cells = ex.filter("kind = 1").select("scene_id", "cls", "gx", "gy", "node")
-    probes = (ex.filter("kind = 2")
-              .select("scene_id", "cls", "gx", "gy",
-                      F.col("node").alias("pnode")))
-    plan = _plan(probes.join(cells, on=["scene_id", "cls", "gx", "gy"]))
+    plan = _plan(regions._stitch_join(ex, on=("cls",)))
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
     assert "HashJoin" in plan or "SortMergeJoin" in plan
@@ -431,7 +424,7 @@ def test_segment_stitch_is_equi(spark):
     import numpy as np
     import pandas as pd
 
-    from i_landsat8_swlst_spark import segment
+    from i_landsat8_swlst_spark import regions, segment
 
     rng = np.random.default_rng(83)
     plane = np.kron(rng.uniform(260, 330, (4, 4)), np.ones((8, 8)))
@@ -444,12 +437,8 @@ def test_segment_stitch_is_equi(spark):
                          "lst_bytes": t.astype("<f4").tobytes()})
     tiles = spark.createDataFrame(pd.DataFrame(rows))
     ex = segment._seg_extract(tiles, 2.0, "lst_bytes", 8, 8)
-    cells = ex.filter("kind = 1").select("scene_id", "gx", "gy", "node", "val")
-    probes = (ex.filter("kind = 2")
-              .select("scene_id", "gx", "gy", F.col("node").alias("pnode"),
-                      F.col("val").alias("pval")))
-    plan = _plan(probes.join(cells, on=["scene_id", "gx", "gy"])
-                 .filter(F.abs(F.col("pval") - F.col("val")) <= 2.0))
+    plan = _plan(regions._stitch_join(
+        ex, accept=F.abs(F.col("pval") - F.col("val")) <= 2.0))
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
     assert "HashJoin" in plan or "SortMergeJoin" in plan
@@ -595,6 +584,7 @@ def test_to_vect_equi_only_and_no_plane_shuffle(spark):
     import numpy as np
 
     from i_landsat8_swlst_spark import vectorize
+    from i_landsat8_swlst_spark.tileops import nominal_dims
 
     rng = np.random.default_rng(5)
     rows = []
@@ -609,13 +599,9 @@ def test_to_vect_equi_only_and_no_plane_shuffle(spark):
     assert "CartesianProduct" not in plan
     # rings come back localCheckpointed (the pass cache is released); gate
     # the pre-collapse plan instead: the edge->region join graph
-    nom = tiles.agg(F.max("w").alias("w"), F.max("h").alias("h")).first()
     ex = vectorize._tovect_pass(tiles, 5.0, "lst_bytes",
-                                int(nom["w"]), int(nom["h"]))
-    cells = ex.filter("kind = 1").select("scene_id", "gx", "gy")
-    pend = (ex.filter("kind = 4")
-            .join(cells, on=["scene_id", "gx", "gy"], how="left_anti"))
-    p2 = _plan(pend)
+                                *nominal_dims(tiles))
+    p2 = _plan(vectorize._pending_edges(ex))
     assert "BroadcastNestedLoopJoin" not in p2 and "CartesianProduct" not in p2
     # one decode pass: the plane source feeds MapInArrow directly, no
     # exchange between the scan and the Python stage

@@ -1,11 +1,12 @@
 """Property-based tests (hypothesis): codec round-trips over arbitrary
-shapes/values, subrange selection totality, S2/hex encoder stability."""
+shapes/values, subrange selection totality, S2/hex encoder stability,
+border-stitch triples of a labelled tile."""
 
 import numpy as np
 from hypothesis import given, settings, strategies as st
 
 import oracle_ref as oracle
-from i_landsat8_swlst_spark import codecs, geo, kernels as K
+from i_landsat8_swlst_spark import codecs, geo, kernels as K, regions
 
 
 @settings(max_examples=25, deadline=None)
@@ -109,3 +110,36 @@ def test_stacked_kernel_bit_identical_to_per_tile(k, h, w, win, seed, with_nan):
             qa=None if qa is None else qa[i].copy(), cloud_values=cloud)
         for key in stacked:
             np.testing.assert_array_equal(stacked[key][i], single[key], err_msg=key)
+
+
+@settings(max_examples=60, deadline=None)
+@given(
+    h=st.integers(1, 9), w=st.integers(1, 9),
+    ragged_w=st.integers(0, 3), ragged_h=st.integers(0, 3),
+    tx=st.integers(0, 5), ty=st.integers(0, 5),
+    n_labels=st.integers(1, 6), density=st.floats(0.0, 1.0),
+    seed=st.integers(0, 2**31 - 1),
+)
+def test_border_triples_match_per_pixel_enumeration(
+        h, w, ragged_w, ragged_h, tx, ty, n_labels, density, seed):
+    """`border_triples` == a per-pixel walk: every labelled pixel on each
+    tile border it touches gives (node, cell, probe one step outward),
+    once per border — 1-px-wide tiles and corners included. The scene
+    origin comes from NOMINAL dims >= the tile's (ragged edge tiles)."""
+    rng = np.random.default_rng(seed)
+    labels = np.where(rng.random((h, w)) < density,
+                      rng.integers(0, n_labels, (h, w)), -1)
+    ox, oy = tx * (w + ragged_w), ty * (h + ragged_h)
+    want = []
+    for y in range(h):
+        for x in range(w):
+            if labels[y, x] < 0:
+                continue
+            node = int(regions._pack_node(tx, ty, np.array([labels[y, x]]))[0])
+            for on_border, dx, dy in ((y == 0, 0, -1), (y == h - 1, 0, 1),
+                                      (x == 0, -1, 0), (x == w - 1, 1, 0)):
+                if on_border:
+                    want.append((node, ox + x, oy + y, ox + x + dx, oy + y + dy))
+    got = list(zip(*(a.tolist() for a in
+                     regions.border_triples(labels, tx, ty, ox, oy))))
+    assert sorted(got) == sorted(want)

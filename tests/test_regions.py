@@ -75,6 +75,17 @@ def test_label_tile_matches_naive_random():
         assert sorted(got) == exp
 
 
+def test_pack_node_rejects_fields_past_21_bits():
+    # a label >= 2**21 used to spill into the tile_y bits and alias another
+    # tile's node: (0, 0, 2**21) packed to the same id as (0, 1, 0)
+    assert regions._pack_node(0, 1, np.array([0]))[0] == 1 << 21
+    for tx, ty, lab in ((0, 0, 1 << 21), (1 << 21, 0, 0), (0, 1 << 21, 0)):
+        with pytest.raises(ValueError, match=r"2\*\*21"):
+            regions._pack_node(tx, ty, np.array([lab]))
+    top = (1 << 21) - 1
+    assert regions._pack_node(top, top, np.array([top]))[0] == (1 << 63) - 1
+
+
 def _tiles_from_plane(scene_id: str, plane: np.ndarray, tw: int, th: int):
     rows = []
     nty, ntx = plane.shape[0] // th, plane.shape[1] // tw
