@@ -88,20 +88,12 @@ def test_pip_query_10k(benchmark):
 
 
 def test_knn_kernel_10k(benchmark):
-    from i_landsat8_swlst_spark.spatial import haversine_km
+    from i_landsat8_swlst_spark.spatial import knn_topk
 
     st = synth.stations_pdf("tiny")
-    slon = st["lon"].to_numpy(np.float64)
-    slat = st["lat"].to_numpy(np.float64)
-
-    def knn():
-        d = haversine_km(LON[:, None], LAT[:, None], slon[None, :], slat[None, :])
-        kk = min(3, len(slon))
-        top = np.argpartition(d, kk - 1, axis=1)[:, :kk]
-        rowi = np.arange(len(LON))[:, None]
-        return top[rowi, np.argsort(d[rowi, top], axis=1)]
-
-    benchmark(knn)
+    id_rank = np.argsort(np.argsort(st["station_id"].to_numpy(object), kind="stable"))
+    benchmark(knn_topk, LON, LAT, st["lon"].to_numpy(np.float64),
+              st["lat"].to_numpy(np.float64), id_rank, 3)
 
 
 # --- round-4 tile kernels ----------------------------------------------------

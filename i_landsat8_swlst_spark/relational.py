@@ -846,8 +846,8 @@ def q_udf_bt(spark, sf_dir):
 
 
 # --- kNN join, fully SQL-expressible form ------------------------------------------
-# The production kNN (spatial.knn_join) is haversine + argpartition inside an
-# Arrow kernel (rows-only q_knn_stations); this twin proves the JOIN SHAPE —
+# The production kNN (spatial.knn_join) is the block-pruned haversine top-k
+# spatial.knn_topk inside an Arrow kernel (rows-only q_knn_stations); this twin proves the JOIN SHAPE —
 # broadcast small side, per-query row_number over distance — against DuckDB
 # using squared planar distance (pure +,* polynomial: IEEE-identical across
 # engines, no trig last-ulp risk). Same pattern, exact hash match.

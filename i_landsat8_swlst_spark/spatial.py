@@ -14,7 +14,10 @@ Scale shape, two regimes:
   The R-tree is a 2-level STR packing (leaf groups of ~sqrt(m) polygons):
   point batches prune against group bboxes first, then member bboxes, then
   exact vectorized ray-casting — the classic broadcast-spatial-join plan
-  (cf. Raptor, PAPERS.md).
+  (cf. Raptor, PAPERS.md). kNN is the same filter-then-refine plan
+  (``knn_topk``): each block of consecutive points keeps only the stations
+  the triangle inequality cannot rule out from the block centre, then
+  ranks exact haversine over those — never a full (n x m) matrix.
 - distributed (pip_join_cells / knn_join_cells / knn_join_cells_exact): the
   vector side is a parquet-backed Spark DataFrame that never transits the
   driver; candidates come from bare cell-key equi joins (ring vertex arrays
@@ -40,7 +43,9 @@ from pyspark.sql.types import (
 )
 
 from . import geo
-from .tileops import batch_from_cols, batch_rows, coalesce_batches, nominal_dims
+from .tileops import (
+    arrow_schema, batch_from_cols, batch_rows, coalesce_batches, nominal_dims,
+)
 
 # --------------------------------------------------------------------------
 # batched cell-encode (vectorized pandas UDFs)
@@ -538,22 +543,96 @@ def haversine_km(lon1, lat1, lon2, lat2):
     return 2 * EARTH_R_KM * np.arcsin(np.sqrt(np.clip(a, 0, 1)))
 
 
-def knn_join(points: DataFrame, stations: pd.DataFrame, k: int = 3,
-             lon_col: str = "lon", lat_col: str = "lat") -> DataFrame:
-    """Each point row exploded to its k nearest stations (+rank, distance).
+# Points per pruning block of knn_topk. Pixel rows arrive in tile raster
+# order, so consecutive points form a compact strip.
+_KNN_BLOCK = 4096
+# Slack (km) of the block filter for haversine rounding: up to ~2e-4 km per
+# distance near antipodal ones (arcsin close to 1), at most two such
+# distances in each of the filter's two triangle inequalities.
+_KNN_EPS_KM = 1e-3
 
-    Stations are broadcast (small side); per batch the distance matrix is
-    (n x m) with argpartition top-k — no shuffle at all. Deterministic
-    tie-break: (distance, station_id).
+
+def _knn_candidates(bx, by, slon, slat, kk):
+    """Indices of the stations that can be among the kk nearest of any point
+    of a block. With block centre c and radius r = max hav(c, p), every point
+    has kk stations within kth(hav(c, s)) + r, and a station s can only be
+    that close if hav(c, s) - r <= kth + r (triangle inequality). A bad
+    centre (longitude wrap, poles) only prunes less; a non-finite centre or
+    station keeps the whole catalog."""
+    cx = (bx.min() + bx.max()) / 2
+    cy = (by.min() + by.max()) / 2
+    r = haversine_km(cx, cy, bx, by).max()
+    dc = haversine_km(cx, cy, slon, slat)
+    if not (np.isfinite(r) and np.isfinite(dc).all()):
+        return np.arange(len(slon))
+    kth = np.partition(dc, kk - 1)[kk - 1]
+    return np.flatnonzero(dc - r <= kth + r + _KNN_EPS_KM)
+
+
+def _topk_columns(d, kk):
+    """Column indices of the kk smallest entries of each row of ``d``, in
+    exact (value, column) order. A row whose first kk + 1 sorted values are
+    not strictly increasing (a tie, or a NaN) is re-sorted stably."""
+    top = np.argsort(d, axis=1)[:, :kk + 1]
+    v = np.take_along_axis(d, top, 1)
+    tied = ~(v[:, :-1] < v[:, 1:]).all(axis=1)
+    if tied.any():
+        top[tied] = np.argsort(d[tied], axis=1, kind="stable")[:, :kk + 1]
+    return top[:, :kk]
+
+
+def knn_topk(px, py, slon, slat, id_rank, k):
+    """The k nearest stations of every point -> ``(station_idx, km)``, each
+    of shape (n, min(k, m)), ordered by (distance, station_id);
+    ``id_rank`` is each station's rank in station_id order.
+
+    Exact: the same stations and bit-equal km as the full (n x m) haversine
+    matrix. Each block of ``_KNN_BLOCK`` consecutive points evaluates only
+    the candidates ``_knn_candidates`` keeps, with station columns in id
+    order so ``_topk_columns`` breaks distance ties by station_id (a NaN
+    point's NaN distances tie, so it gets the first k stations by id).
     """
-    spark = points.sparkSession
-    st = (
+    kk = min(k, len(slon))
+    by_id = np.argsort(id_rank)
+    slon, slat = slon[by_id], slat[by_id]
+    idx = np.empty((len(px), kk), dtype=np.int64)
+    km = np.empty((len(px), kk))
+    for s in range(0, len(px), _KNN_BLOCK):
+        bx, by = px[s:s + _KNN_BLOCK], py[s:s + _KNN_BLOCK]
+        cand = _knn_candidates(bx, by, slon, slat, kk)
+        d = haversine_km(bx[:, None], by[:, None], slon[cand][None, :], slat[cand][None, :])
+        top = _topk_columns(d, kk)
+        idx[s:s + _KNN_BLOCK] = by_id[cand[top]]
+        km[s:s + _KNN_BLOCK] = np.take_along_axis(d, top, 1)
+    return idx, km
+
+
+def _station_arrays(op: str, stations: pd.DataFrame, k: int) -> tuple:
+    """(ids, lon, lat, cwv | None) of the broadcast station catalog. Raises
+    at plan build when the kNN would silently drop every point."""
+    if k < 1:
+        raise ValueError(f"{op}: k must be >= 1, got {k}")
+    if len(stations) == 0:
+        raise ValueError(f"{op}: stations is empty; kNN needs at least one station")
+    return (
         stations["station_id"].to_numpy(object),
         stations["lon"].to_numpy(np.float64),
         stations["lat"].to_numpy(np.float64),
         stations["cwv_obs"].to_numpy(np.float64) if "cwv_obs" in stations else None,
     )
-    bc = spark.sparkContext.broadcast(st)
+
+
+def knn_join(points: DataFrame, stations: pd.DataFrame, k: int = 3,
+             lon_col: str = "lon", lat_col: str = "lat") -> DataFrame:
+    """Each point row exploded to its k nearest stations (+rank, distance).
+
+    Stations are broadcast (small side) and ``knn_topk`` matches each batch
+    exactly, evaluating haversine only against the stations its
+    block-pruning filter keeps — no shuffle at all. Deterministic
+    tie-break: (distance, station_id).
+    """
+    spark = points.sparkSession
+    bc = spark.sparkContext.broadcast(_station_arrays("knn_join", stations, k))
     out_schema = StructType(points.schema.fields + [
         StructField("station_id", StringType()),
         StructField("station_rank", IntegerType()),
@@ -563,26 +642,18 @@ def knn_join(points: DataFrame, stations: pd.DataFrame, k: int = 3,
 
     def fn(batches):
         ids, slon, slat, scwv = bc.value
-        m = len(ids)
-        kk = min(k, m)
-        # stable secondary sort on station_id for exact determinism
-        id_order = np.argsort(ids, kind="stable")
+        kk = min(k, len(ids))
+        id_rank = np.argsort(np.argsort(ids, kind="stable"))
         for pdf in batches:
             if not len(pdf):
                 continue
-            plon = pdf[lon_col].to_numpy(np.float64)
-            plat = pdf[lat_col].to_numpy(np.float64)
-            d = haversine_km(plon[:, None], plat[:, None], slon[None, :], slat[None, :])
-            # top-k with deterministic tie-break (distance, station_id)
-            key = d + np.argsort(id_order)[None, :] * 1e-12
-            top = np.argpartition(key, kk - 1, axis=1)[:, :kk]
-            rowi = np.arange(len(pdf))[:, None]
-            order = np.argsort(key[rowi, top], axis=1)
-            top = top[rowi, order]
+            top, km = knn_topk(pdf[lon_col].to_numpy(np.float64),
+                               pdf[lat_col].to_numpy(np.float64),
+                               slon, slat, id_rank, k)
             rep = pdf.loc[pdf.index.repeat(kk)].reset_index(drop=True)
             rep["station_id"] = ids[top].ravel()
             rep["station_rank"] = np.tile(np.arange(1, kk + 1, dtype=np.int32), len(pdf))
-            rep["station_km"] = d[rowi, top].ravel()
+            rep["station_km"] = km.ravel()
             rep["station_cwv"] = scwv[top].ravel() if scwv is not None else np.nan
             yield rep
 
@@ -872,17 +943,10 @@ def enrich_pixels(points: DataFrame, aoi: pd.DataFrame, stations: pd.DataFrame,
     fused hop computes them together — same results row-for-row as the
     composition (the pytest oracles cover each stage individually).
     """
-    import pyarrow as pa
-
     spark = points.sparkSession
     pp = PackedPolygons.from_pdf(aoi)
     cat = dict(zip(aoi["aoi_id"], aoi.get("category", pd.Series(index=aoi.index, dtype=object))))
-    st = (
-        stations["station_id"].to_numpy(object),
-        stations["lon"].to_numpy(np.float64),
-        stations["lat"].to_numpy(np.float64),
-        stations["cwv_obs"].to_numpy(np.float64) if "cwv_obs" in stations else None,
-    )
+    st = _station_arrays("enrich_pixels", stations, k)
     bc = spark.sparkContext.broadcast((pp, cat, st))
 
     in_fields = list(points.schema.fields)
@@ -895,17 +959,11 @@ def enrich_pixels(points: DataFrame, aoi: pd.DataFrame, stations: pd.DataFrame,
     ])
     in_names = [f.name for f in in_fields]
     lon_i, lat_i = in_names.index(lon_col), in_names.index(lat_col)
-
-    import pyarrow as _pa
-
-    _PA = {"string": _pa.string(), "int": _pa.int32(), "bigint": _pa.int64(),
-           "double": _pa.float64(), "binary": _pa.binary()}
-    pa_out = _pa.schema([(f.name, _PA[f.dataType.simpleString()]) for f in out_schema])
+    pa_out = arrow_schema(out_schema)
 
     def fn(batches):
         pp, cat, (ids, slon, slat, scwv) = bc.value
-        m = len(ids)
-        kk = min(k, m)
+        kk = min(k, len(ids))
         id_rank = np.argsort(np.argsort(ids, kind="stable"))
         for batch in coalesce_batches(batches):
             n = batch.num_rows
@@ -915,7 +973,6 @@ def enrich_pixels(points: DataFrame, aoi: pd.DataFrame, stations: pd.DataFrame,
             py = batch.column(lat_i).to_numpy(zero_copy_only=False).astype(np.float64)
 
             # cells (same kernels the pandas UDFs wrap)
-            from . import geo
             cells = [geo.hexcell(px, py, r) for r in (7, 8, 9)] + [geo.s2_cell(px, py, s2_level)]
 
             # PIP -> (point index, aoi arrays), left semantics
@@ -932,20 +989,12 @@ def enrich_pixels(points: DataFrame, aoi: pd.DataFrame, stations: pd.DataFrame,
                                dtype=object)
 
             # kNN on the ORIGINAL points, then indexed through idxA
-            d = haversine_km(px[:, None], py[:, None], slon[None, :], slat[None, :])
-            key = d + id_rank[None, :] * 1e-12
-            top = np.argpartition(key, kk - 1, axis=1)[:, :kk]
-            rowi = np.arange(n)[:, None]
-            order = np.argsort(key[rowi, top], axis=1)
-            top = top[rowi, order]                      # (n, kk) station idx
+            top, km = knn_topk(px, py, slon, slat, id_rank, k)
 
             # final fan-out: each aoi-expanded row repeats kk times
             F_idx = np.repeat(idxA, kk)                  # input row per output
             st_pick = top[idxA].ravel()                  # station per output
-            arrays = []
-            for i, f in enumerate(in_fields):
-                col = batch.column(i).take(pa.array(F_idx))
-                arrays.append(col)
+            arrays = [batch.column(i).take(pa.array(F_idx)) for i in range(len(in_fields))]
             rep_aoi = np.repeat(aoi_ids, kk)
             rep_cat = np.repeat(aoi_cat, kk)
             for c in cells:
@@ -954,7 +1003,7 @@ def enrich_pixels(points: DataFrame, aoi: pd.DataFrame, stations: pd.DataFrame,
             arrays.append(pa.array(rep_cat, type=pa.string()))
             arrays.append(pa.array(ids[st_pick], type=pa.string()))
             arrays.append(pa.array(np.tile(np.arange(1, kk + 1, dtype=np.int32), idxA.size)))
-            arrays.append(pa.array(d[F_idx, st_pick]))
+            arrays.append(pa.array(km[idxA].ravel()))
             arrays.append(pa.array(scwv[st_pick] if scwv is not None
                                    else np.full(st_pick.size, np.nan)))
             yield pa.RecordBatch.from_arrays(arrays, schema=pa_out)
@@ -982,11 +1031,9 @@ def enrich_pixels_cells(points: DataFrame, aoi, stations, k: int = 3,
     ``exact=False`` uses the single-round ``knn_join_cells`` and keeps its
     ``knn_certified`` flag on every row.
 
-    Known deltas vs the broadcast path: missing ``cwv_obs`` yields NULL
-    ``station_cwv`` here (the fused Arrow kernel emits NaN), and exact ties
-    in station distance break by (station_km, station_id) via row_number
-    rather than the fused kernel's epsilon-rank — identical on any input
-    without bit-equal distances.
+    Known delta vs the broadcast path: missing ``cwv_obs`` yields NULL
+    ``station_cwv`` here (the fused Arrow kernel emits NaN). Both paths
+    break exact distance ties by (station_km, station_id).
     """
     if key_cols is None:
         raise ValueError("enrich_pixels_cells needs key_cols identifying a point row")

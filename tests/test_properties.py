@@ -143,3 +143,55 @@ def test_border_triples_match_per_pixel_enumeration(
     got = list(zip(*(a.tolist() for a in
                      regions.border_triples(labels, tx, ty, ox, oy))))
     assert sorted(got) == sorted(want)
+
+
+_LON = st.floats(min_value=-180.0, max_value=180.0)
+_LAT = st.floats(min_value=-90.0, max_value=90.0)
+
+
+@st.composite
+def _knn_case(draw):
+    """Stations and one block of points for knn_topk: blocks straddling
+    ±180°, latitudes near the poles, near-antipodal stations, duplicate
+    station coordinates, k >= m, 1-point blocks and blocks past _KNN_BLOCK."""
+    from i_landsat8_swlst_spark.spatial import _KNN_BLOCK
+
+    seed = draw(st.integers(0, 2**31 - 1))
+    rng = np.random.default_rng(seed)
+    n = draw(st.sampled_from([1, 2, 37, _KNN_BLOCK + 3]))
+    m = draw(st.integers(1, 30))
+    k = draw(st.one_of(st.integers(1, 3), st.integers(m, m + 2)))
+    cx = draw(st.one_of(_LON, st.sampled_from([-179.999, 179.999])))
+    cy = draw(st.one_of(_LAT, st.sampled_from([-89.9, 89.9])))
+    spread = draw(st.sampled_from([0.0, 1e-7, 1e-3, 0.5, 30.0]))
+    px = (cx + rng.uniform(-spread, spread, n) + 180.0) % 360.0 - 180.0
+    py = np.clip(cy + rng.uniform(-spread, spread, n), -90.0, 90.0)
+    where = draw(st.sampled_from(["anywhere", "antipode", "around"]))
+    if where == "anywhere":
+        slon, slat = rng.uniform(-180, 180, m), rng.uniform(-90, 90, m)
+    else:
+        # around the block, or around its antipode, at the block's scale
+        ox, oy = (cx, cy) if where == "around" else ((cx + 360.0) % 360.0 - 180.0, -cy)
+        jitter = draw(st.sampled_from([0.0, 1e-9, 1e-5])) + 2.0 * spread
+        slon = (ox + rng.uniform(-jitter, jitter, m) + 180.0) % 360.0 - 180.0
+        slat = np.clip(oy + rng.uniform(-jitter, jitter, m), -90.0, 90.0)
+    dup = draw(st.integers(0, m - 1))
+    slon[:dup], slat[:dup] = slon[m - dup:], slat[m - dup:]
+    ids = np.array([f"S{i:03d}" for i in rng.permutation(m)], dtype=object)
+    return px, py, slon, slat, ids, k
+
+
+@settings(max_examples=150, deadline=None)
+@given(case=_knn_case())
+def test_knn_topk_matches_sorted_oracle(case):
+    from i_landsat8_swlst_spark.spatial import haversine_km, knn_topk
+
+    px, py, slon, slat, ids, k = case
+    d = haversine_km(px[:, None], py[:, None], slon[None, :], slat[None, :])
+    top, km = knn_topk(px, py, slon, slat, np.argsort(np.argsort(ids, kind="stable")), k)
+    kk = min(k, len(ids))
+    assert top.shape == km.shape == (len(px), kk)
+    for i in range(len(px)):
+        exp = sorted(range(len(ids)), key=lambda j: (d[i, j], ids[j]))[:kk]
+        assert list(ids[top[i]]) == list(ids[exp]), i
+        assert km[i].tobytes() == d[i, exp].tobytes(), i

@@ -69,11 +69,9 @@ def test_knn_matches_bruteforce():
         for i in range(len(plon)):
             order = sorted(range(len(ids)), key=lambda j: (d[i, j], ids[j]))
             exp.append([ids[j] for j in order[:k]])
-        # engine path (numpy internals of knn_join)
-        key = d + np.argsort(np.argsort(ids, kind="stable"))[None, :] * 1e-12
-        top = np.argpartition(key, k - 1, axis=1)[:, :k]
-        rowi = np.arange(len(plon))[:, None]
-        top = top[rowi, np.argsort(key[rowi, top], axis=1)]
+        # engine path (the top-k helper of knn_join and enrich_pixels)
+        top, _ = spatial.knn_topk(plon, plat, st["lon"].to_numpy(), st["lat"].to_numpy(),
+                                  np.argsort(np.argsort(ids, kind="stable")), k)
         got = ids[top]
         for i in range(len(plon)):
             assert list(got[i]) == exp[i], i
@@ -121,6 +119,41 @@ def test_knn_join_spark(spark):
                                  pdf.loc[pdf.pid == pid, "lat"].iloc[0],
                                  st["lon"].to_numpy(), st["lat"].to_numpy())
         assert rows.iloc[0]["station_id"] == st["station_id"].iloc[int(np.argmin(d))]
+
+
+@pytest.mark.parametrize("op", ["knn_join", "enrich_pixels"])
+@pytest.mark.parametrize("k, n_stations, arg", [(0, 4, "k"), (-1, 4, "k"), (3, 0, "stations")])
+def test_knn_operators_reject_k_below_one_and_empty_catalog(spark, op, k, n_stations, arg):
+    """k < 1 or an empty station catalog used to return zero rows (even
+    with how='left'); both operators now raise at plan build."""
+    pts = spark.createDataFrame(pd.DataFrame({"pid": [0, 1], "lon": [5.0, 6.0],
+                                              "lat": [45.0, 46.0]}))
+    st = synth.stations_pdf("tiny").iloc[:n_stations]
+    with pytest.raises(ValueError, match=rf"{op}: {arg}"):
+        if op == "knn_join":
+            spatial.knn_join(pts, st, k=k)
+        else:
+            spatial.enrich_pixels(pts, synth.aoi_pdf("tiny"), st, k=k)
+
+
+@pytest.mark.parametrize("extra", ["float", "boolean", "timestamp"])
+def test_enrich_pixels_accepts_any_point_column_type(spark, extra):
+    """A points frame with a float, boolean or timestamp column used to
+    raise KeyError at plan build; the extra column passes through intact."""
+    from pyspark.sql import functions as F
+
+    pdf = pd.DataFrame({"pid": np.arange(6, dtype=np.int64),
+                        "lon": np.linspace(-1.0, 1.0, 6), "lat": np.linspace(40.0, 41.0, 6)})
+    pts = spark.createDataFrame(pdf).withColumn(
+        "extra", (F.col("pid") % 2 == 0) if extra == "boolean"
+        else F.timestamp_seconds(F.col("pid") * 3600) if extra == "timestamp"
+        else (F.col("pid") * 0.5).cast("float"))
+    out = spatial.enrich_pixels(pts, synth.aoi_pdf("tiny"), synth.stations_pdf("tiny"), k=2)
+    assert out.schema["extra"].dataType.simpleString() == extra
+    exp = {r.pid: r.extra for r in pts.collect()}
+    got = out.select("pid", "extra", "station_rank").collect()
+    assert len(got) == 2 * len(pdf)
+    assert all(r.extra == exp[r.pid] for r in got)
 
 
 def test_with_cells_spark(spark):
